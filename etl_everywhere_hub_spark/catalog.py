@@ -44,19 +44,23 @@ BROADCAST_TABLES = {"region", "nation", "supplier"}
 # footers for schema inference on EVERY call; a real deployment
 # resolves tables through a catalog that caches exactly this
 # metadata. DataFrames are immutable plans, so handing back the same
-# object is safe; keyed by the session so a stopped/rebuilt session
-# never leaks stale plans.
-_TABLE_MEMO: dict[tuple[int, str], DataFrame] = {}
+# object is safe. Keyed weakly by the session OBJECT (not its id(), which
+# a rebuilt session can reuse), so a new session never receives
+# another session's frame.
+_TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with canonical column types."""
     configure_session(spark)
-    memo_key = (id(spark), f"{sf_dir}/{name}.parquet")
-    cached = _TABLE_MEMO.get(memo_key)
+    memo = _TABLE_MEMO.setdefault(spark, {})
+    path = f"{sf_dir}/{name}.parquet"
+    cached = memo.get(path)
     if cached is not None:
         return cached
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanosAsLong read the raw int64 nanos; truncate to micros like
         # DuckDB does and store wall-clock (no timezone shift). Integer
@@ -65,7 +69,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn(
             "ts", F.expr("CAST(timestamp_micros(ts div 1000) AS timestamp_ntz)")
         )
-    _TABLE_MEMO[memo_key] = df
+    memo[path] = df
     return df
 
 
@@ -150,7 +154,8 @@ def estimated_scan_splits(df: DataFrame) -> int:
         _SPLIT_CONF_MEMO[spark] = memo
     max_pb, open_cost, parallelism = memo
     total = sum(sizes) + open_cost * len(sizes)
-    max_split = min(max_pb, max(open_cost, total // max(1, parallelism)))
+    # >= 1: with openCostInBytes=0 and only empty files every term is 0
+    max_split = max(1, min(max_pb, max(open_cost, total // max(1, parallelism))))
     chunks: list[int] = []
     for s in sizes:
         n_full, rem = divmod(s, max_split)

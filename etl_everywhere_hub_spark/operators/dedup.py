@@ -15,12 +15,12 @@ from __future__ import annotations
 
 import logging
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_everywhere_hub_spark.functions.hashing import md5_long
 from etl_everywhere_hub_spark.functions.text import shingles, tokens
+from etl_everywhere_hub_spark.operators.lineage import truncate
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -375,34 +375,26 @@ def minhash_near_dup(
     (see ``lsh_candidate_pairs``) — unlike the collapse it bounds
     recall, so it logs what it drops.
 
-    Signatures are computed entirely MAP-SIDE: the distinct shingle
-    set stays an array column, each m_s is array_min(transform(...)) —
-    no explode and no groupBy anywhere before banding, so the only
-    shuffles in the whole pipeline are the band self-join and the
-    candidate-pair distinct; verification is map-side
-    size(array_intersect) over the docs arrays attached to each
-    candidate pair (two equi joins against the persisted ``docs``).
-    ``docs`` is persisted and materialized eagerly (it feeds the
-    signature chain and both verification joins; lazy persists let
-    parallel branches race to fill the same cache, re-running the
-    upstream DAG — measured 47s → ~5s at sf0.1). On a cluster this is
-    the same call with MEMORY_AND_DISK spilling.
+    The pipeline builds ONE per-document frame — id, member list (with
+    the collapse), distinct shingle array, base hashes, shingle count
+    — and materializes it once through ``lineage.truncate``, the
+    reliable checkpoint when a checkpoint directory is set. Everything
+    downstream reads that frame: the signatures (map-side
+    array_min(transform(...)), no explode and no groupBy), the band
+    keys and the cap accounting, both verification joins (map-side
+    size(array_intersect) over the arrays attached to each candidate
+    pair), the member expansion and the within-group pairs. Reading a
+    truncated frame instead of a lazily persisted one also keeps the
+    parallel branches from racing to fill the same cache (which
+    re-ran the upstream DAG), and the downstream plans no longer
+    embed the per-document subtree.
     """
     # All the heavy per-doc work (shingling, md5, minhash transforms)
-    # is map-side, so its parallelism equals the SCAN's partition count.
-    # A small corpus arrives as one parquet split — spread it across
-    # the cluster first. At scale the scan already has >= cores
-    # partitions and this is a no-op (no shuffle inserted). Split
-    # count is the driver-side estimate (catalog.estimated_scan_splits,
-    # round 13) — not a plan→RDD conversion; non-file-scan inputs
-    # count as at-scale and skip the spread.
-    from etl_everywhere_hub_spark.catalog import estimated_scan_splits
-
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if estimated_scan_splits(df) < cores:
-        df = df.repartition(cores, id_col)
-
-    grouped = None
+    # is map-side, so its parallelism is the partition count of the
+    # rows it reads.
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    keep = [f"`{id_col}`"]
     if collapse_exact:
         # ONE groupBy on the 16-byte text fingerprint, BEFORE any
         # tokenization: partial aggregation collapses each partition's
@@ -418,7 +410,7 @@ def minhash_near_dup(
         # construction dominated the bench's timed region (measured:
         # q41 build 0.71 s of a 1.24 s min; expr-string form cut the
         # full query 2.06 -> 1.52 s min, same-session alternating A/B).
-        grouped = (
+        df = (
             df.groupBy(F.expr(f"md5(`{text_col}`) AS __gk"))
             .agg(
                 F.expr(f"min(struct(`{id_col}`, `{text_col}`)) AS __rt"),
@@ -429,33 +421,53 @@ def minhash_near_dup(
                 f"__rt.`{text_col}` AS `{text_col}`",
                 "__members",
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        df = grouped.select(id_col, text_col)
+        keep.append("__members")
+        # AQE sizes the collapse's output partitions for its cheap rows
+        # (advisory-size coalescing): below ~advisory x cores bytes of
+        # distinct text the shingling would run on a handful of tasks,
+        # on ONE at fixture scale. Re-spread on the id to the session's
+        # shuffle partitioning (at least one partition per core), which
+        # AQE leaves as it is.
+        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        df = df.repartition(max(cores, parts), id_col)
+    else:
+        # The rows come straight from the scan. A small corpus arrives
+        # as one parquet split — spread it across the cluster first. At
+        # scale the scan already has >= cores partitions and this is a
+        # no-op (no shuffle inserted). Split count is the driver-side
+        # estimate (catalog.estimated_scan_splits); non-file-scan
+        # inputs count as at-scale and skip the spread.
+        from etl_everywhere_hub_spark.catalog import estimated_scan_splits
 
-    # split on the single-space separator — the expr twin of
-    # functions.text.tokens (pinned equivalent in tests)
-    toks = df.selectExpr(f"`{id_col}`", f"split(`{text_col}`, ' ') AS __toks")
-    docs = (
-        toks.selectExpr(
-            f"`{id_col}`",
-            f"array_distinct(CASE WHEN size(__toks) < {k} THEN "
-            f"cast(array() AS array<string>) ELSE "
-            f"transform(sequence(1, size(__toks) - {k - 1}), "
-            f"i -> concat_ws(' ', slice(__toks, i, {k}))) END) AS sh",
+        if estimated_scan_splits(df) < cores:
+            df = df.repartition(cores, id_col)
+    docs = truncate(
+        # split on the single-space separator — the expr twin of
+        # functions.text.tokens (pinned equivalent in tests)
+        df.selectExpr(*keep, f"split(`{text_col}`, ' ') AS __toks")
+        # a doc has a shingle iff it has >= k tokens; docs without one
+        # never pair, and with the collapse this also drops their
+        # groups from the member expansion below. Filtering on the
+        # token count (not on the shingle array's size) keeps the
+        # pushed-down predicate cheap: Catalyst pushes it below the
+        # spread exchange, where a shingle-size predicate would build
+        # every shingle array twice.
+        .filter(f"size(__toks) >= {k}")
+        .selectExpr(
+            *keep,
+            f"array_distinct(transform(sequence(1, size(__toks) - {k - 1}), "
+            f"i -> concat_ws(' ', slice(__toks, i, {k})))) AS sh",
         )
         .selectExpr(
-            f"`{id_col}`",
+            *keep,
             "sh",
             # expr twin of functions.hashing.md5_long(s) % MINHASH_P
             f"transform(sh, s -> cast(conv(substring(md5(cast(s AS binary)),"
             f" 1, 15), 16, 10) AS bigint) % {MINHASH_P}L) AS h0s",
             "size(sh) AS n_sh",
         )
-        .filter("n_sh > 0")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    docs.count()
     sigs = docs.selectExpr(
         f"`{id_col}`",
         *[
@@ -471,7 +483,7 @@ def minhash_near_dup(
     # Verification is MAP-SIDE set intersection (round-9, VERDICT r8
     # item #4): docs already holds each doc's DISTINCT shingle array,
     # so attaching both sides' arrays to the candidate pairs (two equi
-    # joins on the persisted docs; AQE broadcasts the pair side — it
+    # joins on the truncated docs; AQE broadcasts the pair side — it
     # is O(true near-dup pairs), not corpus-sized) and taking
     # size(array_intersect) computes the exact Jaccard with ZERO
     # additional shuffles. This replaces the inverted-index explode →
@@ -503,20 +515,15 @@ def minhash_near_dup(
     # out of the member arrays. The fan-out is exactly the true answer
     # size (near-dup output over a duplicate cluster IS quadratic in
     # the cluster — callers wanting cluster-sized output should stop
-    # at the representative pairs + membership map in ``grouped``).
-    mem = grouped.selectExpr(
-        f"`{id_col}` AS __rep", "explode(__members) AS __mid"
-    )
+    # at the representative pairs + the membership map in ``docs``).
+    mem = docs.selectExpr(f"`{id_col}` AS __rep", "explode(__members) AS __mid")
     cross = (
         verified.join(mem.selectExpr("__rep AS a", "__mid AS ma"), "a")
         .join(mem.selectExpr("__rep AS b", "__mid AS mb"), "b")
         .selectExpr("least(ma, mb) AS a", "greatest(ma, mb) AS b", "jaccard")
     )
-    # groups whose representative produced no shingles never enter the
-    # pipeline in the uncollapsed form either — exclude them here too
     within = (
-        grouped.filter("size(__members) >= 2")
-        .join(docs.select(id_col), id_col, "left_semi")
+        docs.filter("size(__members) >= 2")
         .selectExpr("explode(__members) AS a", "__members")
         .selectExpr("a", "explode(__members) AS b")
         .filter("a < b")

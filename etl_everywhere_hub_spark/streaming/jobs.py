@@ -15,6 +15,7 @@ per device — state size is O(devices), not O(events).
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 from typing import Iterable
 
@@ -225,15 +226,24 @@ def run_to_table(stream_df: DataFrame, output_mode: str = "append") -> DataFrame
     cap = 4 * spark.sparkContext.defaultParallelism
     if int(spark.conf.get("spark.sql.shuffle.partitions")) > cap:
         spark.conf.set("spark.sql.shuffle.partitions", str(cap))
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # Nothing resumes this checkpoint (the sink is an in-memory table
+    # drained in one call), so it is deleted once the query has stopped.
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return stream_df.sparkSession.table(name)
 
 

@@ -1,6 +1,7 @@
-"""Round-13 infra guards: the driver-side scan-split estimate that
-replaced df.rdd.getNumPartitions() in every spread guard (VERDICT r12
-#2/#6), the WeakSet configure_session memo (ADVICE r12), and the
+"""Infra guards: the driver-side scan-split estimate that replaced
+df.rdd.getNumPartitions() in every spread guard (VERDICT r12 #2/#6),
+the spread guards' no-op paths, the session-keyed memos (WeakSet
+configure_session memo, weak-keyed table memo), and the
 case-insensitive asof_join payload lookup (ADVICE r12)."""
 
 from __future__ import annotations
@@ -65,6 +66,58 @@ def test_non_file_frame_counts_as_at_scale(spark):
     from etl_everywhere_hub_spark.queries import _spread_scan
 
     assert _spread_scan(df, "id") is df
+
+
+def test_estimate_survives_zero_open_cost_on_empty_files(spark, tmp_path):
+    # openCostInBytes=0 with only empty input files made every term of
+    # maxSplitBytes zero -> divmod(0, 0). A new session reads its own
+    # split confs (the conf memo is per session object).
+    for i in range(3):
+        (tmp_path / f"part-{i}.txt").write_bytes(b"")
+    s2 = spark.newSession()
+    s2.conf.set("spark.sql.files.openCostInBytes", "0")
+    df = s2.read.text(str(tmp_path))
+    assert len(df.inputFiles()) == 3
+    assert estimated_scan_splits(df) == 0  # nothing to read, no crash
+
+
+def test_spread_cached_noops_at_machine_parallelism(spark):
+    from etl_everywhere_hub_spark.queries import _spread_cached
+
+    df = spark.range(100)
+    cores = spark.sparkContext.defaultParallelism
+    keep = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        # shuffle partitioning already reaches the cores: same object
+        spark.conf.set("spark.sql.shuffle.partitions", str(cores))
+        assert _spread_cached(df, "id") is df
+        if cores > 1:
+            spark.conf.set("spark.sql.shuffle.partitions", str(cores - 1))
+            spread = _spread_cached(df, "id")
+            assert spread is not df
+            assert "REPARTITION" in spread._jdf.queryExecution().toString()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", keep)
+
+
+def test_table_memo_never_crosses_sessions(spark, sf_dir):
+    import weakref
+
+    from etl_everywhere_hub_spark import catalog
+
+    # keyed by the session OBJECT, held weakly: a rebuilt session is a
+    # new key no matter which address it lands on
+    assert isinstance(catalog._TABLE_MEMO, weakref.WeakKeyDictionary)
+    first = load_table(spark, sf_dir, "region")
+    assert load_table(spark, sf_dir, "region") is first  # memo hit
+    for _ in range(3):
+        rebuilt = spark.newSession()
+        df = load_table(rebuilt, sf_dir, "region")
+        assert df is not first
+        assert df.sparkSession is rebuilt
+        assert load_table(rebuilt, sf_dir, "region") is df
+        del rebuilt, df
+        gc.collect()
 
 
 def test_configure_session_memo_is_weak(spark):

@@ -1251,3 +1251,20 @@ def test_streaming_near_dup_multi_batch_state(spark, sf_dir, tmp_path):
     }
     assert got == truth
     assert sum(v[0] for v in truth.values()) > 0, "fixture has no near-dups"
+
+
+def test_run_to_table_removes_its_checkpoint(spark, tmp_path, monkeypatch):
+    """run_to_table drains into an in-memory table and nothing resumes
+    its checkpoint, so the directory is gone once the call returns —
+    and the drained rows are still readable."""
+    import tempfile
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.jsonl").write_text('{"k": 1}\n{"k": 2}\n')
+    ckpt_root = tmp_path / "tmp"
+    ckpt_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(ckpt_root))
+    out = jobs.run_to_table(spark.readStream.schema("k long").json(str(src)))
+    assert sorted(r["k"] for r in out.collect()) == [1, 2]
+    assert [p.name for p in ckpt_root.iterdir() if p.name.startswith("ckpt_")] == []

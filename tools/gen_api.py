@@ -25,6 +25,7 @@ SECTIONS = [
     ("Deduplication", "etl_everywhere_hub_spark.operators.dedup"),
     ("Similarity search", "etl_everywhere_hub_spark.operators.similarity"),
     ("Iterative graph ops", "etl_everywhere_hub_spark.operators.graph"),
+    ("Lineage truncation", "etl_everywhere_hub_spark.operators.lineage"),
     ("Clustering", "etl_everywhere_hub_spark.operators.clustering"),
     ("Frequency sketches", "etl_everywhere_hub_spark.operators.sketches"),
     ("Splits / sampling / packing", "etl_everywhere_hub_spark.operators.sampling"),
