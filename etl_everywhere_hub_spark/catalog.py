@@ -73,17 +73,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-# Split-sizing confs + parallelism, fetched once per session (three
-# py4j round trips) and held weakly so a stopped session's entry dies
-# with the object instead of aliasing a reused address.
-_SPLIT_CONF_MEMO: "weakref.WeakKeyDictionary[SparkSession, tuple[int, int, int]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 _BYTE_UNITS = {
     "": 1, "b": 1,
     "k": 1 << 10, "kb": 1 << 10,
@@ -127,7 +116,12 @@ def estimated_scan_splits(df: DataFrame) -> int:
     count so every spread guard no-ops. That is the correct at-scale
     posture: a warehouse table has plenty of splits, and the guards
     exist only to rescue small local fixtures that arrive as one
-    split."""
+    split.
+
+    Assumption: every input file is splittable the way parquet is.
+    Spark reads a non-splittable file (gzipped text, for one) as ONE
+    split whatever its size, so for such inputs this over-counts and a
+    guard may skip a spread the scan actually needed."""
     at_scale = 1 << 30
     try:
         files = df.inputFiles()
@@ -143,16 +137,12 @@ def estimated_scan_splits(df: DataFrame) -> int:
             sizes.append(os.path.getsize(unquote(urlparse(uri).path)))
         except OSError:
             return at_scale
+    # read on every call: a runtime ``spark.conf.set`` must move the
+    # estimate the way it moves Spark's own planning
     spark = df.sparkSession
-    memo = _SPLIT_CONF_MEMO.get(spark)
-    if memo is None:
-        memo = (
-            _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20),
-            _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20),
-            spark.sparkContext.defaultParallelism,
-        )
-        _SPLIT_CONF_MEMO[spark] = memo
-    max_pb, open_cost, parallelism = memo
+    max_pb = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
+    open_cost = _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20)
+    parallelism = spark.sparkContext.defaultParallelism
     total = sum(sizes) + open_cost * len(sizes)
     # >= 1: with openCostInBytes=0 and only empty files every term is 0
     max_split = max(1, min(max_pb, max(open_cost, total // max(1, parallelism))))

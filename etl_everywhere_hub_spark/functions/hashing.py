@@ -14,10 +14,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def md5_hex(col: Column | str) -> Column:
-    return F.md5(F.col(col) if isinstance(col, str) else col)
-
-
 def md5_long(col: Column) -> Column:
     """First 15 hex chars of md5 as a non-negative int64 (60 bits).
 

@@ -85,21 +85,6 @@ def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
     return hits / F.size(toks)
 
 
-def quality_score(text: Column) -> Column:
-    """Composite quality score in [0,1]: length + stopword + punct terms.
-
-    Mirrors common LLM-corpus quality filters (length window, enough
-    function words, not symbol soup).
-    """
-    n_words = word_count(text)
-    len_term = F.when((n_words >= 20) & (n_words <= 1000), F.lit(1.0)).otherwise(
-        F.lit(0.0)
-    )
-    stop_term = F.least(stopword_ratio(text) * 10.0, F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct_ratio(text) * 5.0, F.lit(1.0))
-    return (len_term + stop_term + punct_term) / 3.0
-
-
 def lang_scores(text: Column) -> list[tuple[str, Column]]:
     toks = tokens(text)
     out = []

@@ -24,7 +24,3 @@ def epoch_ms_to_iso(col: Column) -> Column:
     """epoch millis → 'YYYY-MM-DDTHH:mm:ss.sssZ' exactly like
     Date.prototype.toISOString (task.ts:129)."""
     return F.date_format(epoch_ms_to_ts(col), ISO_MILLIS_FMT)
-
-
-def ts_to_epoch_ms(col: Column) -> Column:
-    return F.unix_millis(col)

@@ -51,8 +51,3 @@ def cosine_exact(a: Column, b: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
-
-
-def l2_normalize(a: Column) -> Column:
-    n = F.sqrt(dot(a, a))
-    return F.transform(a, lambda x: x.cast("double") / n)

@@ -1,37 +1,32 @@
-"""DEFLATE (RFC 1951) + gzip (RFC 1952) codec, dependency-free —
-round 11.
+"""DEFLATE (RFC 1951) + gzip (RFC 1952) codec.
 
 Why this belongs in the engine: the dominant on-disk format of real
 web-crawl corpora is not parquet but gzip — Common Crawl's WARC/WET
 archives are CONCATENATED GZIP MEMBERS, one per record, precisely so
 a reader can split and inflate records independently. An engine that
 claims 100 TB crawl ingestion (SURVEY §2 multimodal/text surface;
-reference ingest analog /root/reference/task.ts:103-115) needs the
-codec, and the container ships no fixture archives — so, as with the
-image/audio codecs, both directions are implemented from the RFCs and
-every parser is pinned against hand-built streams plus the stdlib
-(zlib/gzip) as a FOREIGN encoder/decoder where available.
+reference ingest analog task.ts:103-115) needs the member framing
+and the split points, and the container ships no fixture archives,
+so the encoder is implemented from the RFCs too.
 
-Implemented from spec:
-- RFC 1951 §3.2: LSB-first bit layer; stored (00), fixed-Huffman
-  (01) and dynamic-Huffman (10) blocks; canonical Huffman
-  construction (§3.2.2); the code-length alphabet with 16/17/18
-  run-length symbols and its permuted transmission order (§3.2.7);
-  length/distance alphabets with extra bits (§3.2.5); the 32 KiB
-  sliding-window copy with overlap semantics.
-- RFC 1952: member framing (magic/CM/FLG/MTIME/XFL/OS), FEXTRA /
-  FNAME / FCOMMENT / FHCRC optional fields, CRC32 + ISIZE trailer
-  validation, and MULTI-MEMBER walks returning per-member offsets —
-  the split points a distributed reader fans out on.
-- Encoders: greedy hash-chain LZ77 matcher (min match 3, 32 KiB
-  window), stored/fixed/dynamic block writers (dynamic builds
+- Decode: the DEFLATE payload is inflated by stdlib ``zlib``
+  (``decompressobj(-15)``, raw RFC 1951); ``inflate`` keeps the
+  (bytes, end offset) contract the member walks fan out on.
+  ``decode_until_eof`` is the shared stream-to-end driver that
+  multimodal/xz.py uses for liblzma too.
+- RFC 1952 framing, from spec: member header (magic/CM/FLG/MTIME/
+  XFL/OS), FEXTRA / FNAME / FCOMMENT / FHCRC optional fields, CRC32 +
+  ISIZE trailer validation, and MULTI-MEMBER walks returning
+  per-member offsets — the split points a distributed reader fans
+  out on. RFC 1950 wrapping (``zlib_unwrap``) likewise keeps its own
+  header checks and adler32 validation.
+- Encoders, from spec: greedy hash-chain LZ77 matcher (min match 3,
+  32 KiB window), stored/fixed/dynamic block writers (dynamic builds
   depth-limited canonical Huffman codes and RLE-codes the
   code-length sequence), gzip member writer with every optional
-  field. decode(encode(x)) == x bit-exactly by construction;
-  tests/test_deflate.py also pins both directions against zlib.
-
-CRC32 uses the stdlib ``binascii.crc32`` (the RFC 1952 Appendix §8
-polynomial; stdlib, not a third-party dependency).
+  field. Queries pin the block types and sizes this writer emits;
+  tests/test_deflate_warc.py pins it against zlib as the foreign
+  decoder.
 
 Scale shape: inflate is sequential WITHIN a member by design — the
 parallel unit is the member (record), exactly how WARC is laid out;
@@ -39,7 +34,9 @@ the engine runs one worker per batch of members (q352/q353)."""
 
 from __future__ import annotations
 
+import lzma
 import struct
+import zlib
 
 from binascii import crc32
 
@@ -60,32 +57,6 @@ _DIST_TABLE = [
 ]
 # §3.2.7 — transmission order of code-length-code lengths
 _CLC_ORDER = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15]
-
-
-class _LsbReader:
-    """LSB-first bit reader (DEFLATE packs Huffman codes MSB-of-code
-    first but fills bytes LSB-first — §3.1.1)."""
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.bitpos = pos * 8
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            byte = self.bitpos >> 3
-            if byte >= len(self.data):
-                raise ValueError("deflate stream truncated")
-            v |= ((self.data[byte] >> (self.bitpos & 7)) & 1) << i
-            self.bitpos += 1
-        return v
-
-    def align_byte(self) -> None:
-        self.bitpos = (self.bitpos + 7) & ~7
-
-    @property
-    def bytepos(self) -> int:
-        return (self.bitpos + 7) >> 3
 
 
 class _LsbWriter:
@@ -140,103 +111,37 @@ def _canonical_codes(lengths: list) -> dict:
     return out
 
 
-class _Decoder:
-    """Bit-serial canonical-Huffman decoder keyed on (code, length) —
-    fixture-scale simplicity over table-driven speed."""
-
-    def __init__(self, lengths: list):
-        codes = _canonical_codes(lengths)
-        self.lut = {(c, ln): sym for sym, (c, ln) in codes.items()}
-        self.max_len = max((ln for _c, ln in codes.values()), default=0)
-
-    def read(self, r: _LsbReader) -> int:
-        code = 0
-        for ln in range(1, self.max_len + 1):
-            code = (code << 1) | r.bits(1)
-            sym = self.lut.get((code, ln))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code")
-
-
 def _fixed_lit_lengths() -> list:
     return [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8
 
 
+_FEED = 1 << 16  # input bytes per decompress call
+
+
+def decode_until_eof(dec, data: bytes, pos: int, codec: str) -> tuple:
+    """Feed ``data[pos:]`` to a stdlib ``zlib``/``lzma`` decompressor
+    object until its stream ends. Returns (decoded bytes, byte position
+    just past the stream). The input goes in slices: ``unused_data``
+    is a copy of whatever followed the stream in the last slice, so a
+    walk over many concatenated members stays linear in the buffer."""
+    view = memoryview(data)
+    parts = []
+    p = pos
+    try:
+        while not dec.eof and p < len(data):
+            parts.append(dec.decompress(view[p : p + _FEED]))
+            p += _FEED
+    except (zlib.error, lzma.LZMAError) as e:
+        raise ValueError(f"{codec}: {e} (stream at byte {pos})") from None
+    if not dec.eof:
+        raise ValueError(f"{codec}: stream at byte {pos} truncated")
+    return b"".join(parts), min(p, len(data)) - len(dec.unused_data)
+
+
 def inflate(data: bytes, pos: int = 0) -> tuple:
-    """Inflate one DEFLATE stream starting at byte ``pos``. Returns
+    """Inflate one raw DEFLATE stream starting at byte ``pos``. Returns
     (decompressed bytes, byte position just past the stream)."""
-    r = _LsbReader(data, pos)
-    out = bytearray()
-    while True:
-        bfinal = r.bits(1)
-        btype = r.bits(2)
-        if btype == 0:  # stored
-            r.align_byte()
-            p = r.bytepos
-            if p + 4 > len(data):
-                raise ValueError("stored block header truncated")
-            ln, nln = struct.unpack_from("<HH", data, p)
-            if ln ^ nln != 0xFFFF:
-                raise ValueError("stored block LEN/NLEN mismatch")
-            if p + 4 + ln > len(data):
-                raise ValueError("stored block truncated")
-            out += data[p + 4 : p + 4 + ln]
-            r.bitpos = (p + 4 + ln) * 8
-        elif btype in (1, 2):
-            if btype == 1:
-                lit_dec = _Decoder(_fixed_lit_lengths())
-                dist_dec = _Decoder([5] * 30)
-            else:
-                hlit = r.bits(5) + 257
-                hdist = r.bits(5) + 1
-                hclen = r.bits(4) + 4
-                clc_len = [0] * 19
-                for i in range(hclen):
-                    clc_len[_CLC_ORDER[i]] = r.bits(3)
-                clc = _Decoder(clc_len)
-                lens: list = []
-                while len(lens) < hlit + hdist:
-                    sym = clc.read(r)
-                    if sym < 16:
-                        lens.append(sym)
-                    elif sym == 16:
-                        if not lens:
-                            raise ValueError("repeat with no previous length")
-                        lens += [lens[-1]] * (3 + r.bits(2))
-                    elif sym == 17:
-                        lens += [0] * (3 + r.bits(3))
-                    else:
-                        lens += [0] * (11 + r.bits(7))
-                if len(lens) != hlit + hdist:
-                    raise ValueError("code length sequence overruns")
-                lit_dec = _Decoder(lens[:hlit])
-                dist_dec = _Decoder(lens[hlit:])
-            while True:
-                sym = lit_dec.read(r)
-                if sym < 256:
-                    out.append(sym)
-                elif sym == 256:
-                    break
-                elif sym <= 285:
-                    base, extra = _LENGTH_TABLE[sym - 257]
-                    length = base + (r.bits(extra) if extra else 0)
-                    dsym = dist_dec.read(r)
-                    if dsym > 29:
-                        raise ValueError(f"invalid distance code {dsym}")
-                    dbase, dextra = _DIST_TABLE[dsym]
-                    dist = dbase + (r.bits(dextra) if dextra else 0)
-                    if dist > len(out):
-                        raise ValueError("distance beyond window start")
-                    for _ in range(length):  # overlap-correct byte copy
-                        out.append(out[-dist])
-                else:
-                    raise ValueError(f"invalid literal/length code {sym}")
-        else:
-            raise ValueError("reserved block type 11")
-        if bfinal:
-            break
-    return bytes(out), r.bytepos
+    return decode_until_eof(zlib.decompressobj(-15), data, pos, "deflate")
 
 
 # --------------------------------------------------------------- LZ77
@@ -335,6 +240,15 @@ def _limited_huffman(freqs: dict, max_len: int) -> list:
                     break
             else:
                 raise ValueError("kraft repair failed")
+        # the lengthening can overshoot into an INCOMPLETE code, which
+        # RFC 1951 decoders (zlib) reject: hand the slack back to the
+        # deepest codes. Every term divides the slack, so this ends
+        # at exactly 2**max_len.
+        kraft = sum(2 ** (max_len - depth[s]) for s in syms)
+        while kraft < 2 ** max_len:
+            s = max(syms, key=lambda s: depth[s])
+            kraft += 2 ** (max_len - depth[s])
+            depth[s] -= 1
     lengths = [0] * n
     for s, d in depth.items():
         lengths[s] = d
@@ -589,8 +503,6 @@ def zlib_unwrap(data: bytes) -> bytes:
     review: pdf.py and seqfile.py had drifted copies; the seqfile
     copy had dropped the FDICT refusal). adler32 comes from the
     stdlib as a checksum utility, like crc32 for gzip."""
-    import zlib as _stdzlib
-
     if len(data) < 6:
         raise ValueError("zlib: stream too short")
     cmf, flg = data[0], data[1]
@@ -604,13 +516,11 @@ def zlib_unwrap(data: bytes) -> bytes:
     if end + 4 > len(data):
         raise ValueError("zlib: truncated adler32 trailer")
     (want,) = struct.unpack_from(">I", data, end)
-    if _stdzlib.adler32(bytes(out)) & 0xFFFFFFFF != want:
+    if zlib.adler32(out) & 0xFFFFFFFF != want:
         raise ValueError("zlib: adler32 mismatch")
-    return bytes(out)
+    return out
 
 
 def zlib_wrap(data: bytes) -> bytes:
-    import zlib as _stdzlib
-
     return (b"\x78\x01" + deflate(data)
-            + struct.pack(">I", _stdzlib.adler32(data) & 0xFFFFFFFF))
+            + struct.pack(">I", zlib.adler32(data) & 0xFFFFFFFF))

@@ -557,12 +557,6 @@ def decode_scan_lossless_arith(
     return p2
 
 
-def _msb(v: int) -> int:
-    """Most-significant-bit power of a positive magnitude — the ``m``
-    the classification rule keys on."""
-    return 1 << (v.bit_length() - 1)
-
-
 def _encode_lossless_arith(
     planes, h, w, precision, predictor, point_transform,
     restart_interval, interleave, dc_cond,

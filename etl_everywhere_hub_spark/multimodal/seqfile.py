@@ -33,13 +33,14 @@ javadoc in hadoop-common, which IS the format spec):
   (4 BE), BooleanWritable (1 byte), BytesWritable (4-byte BE length
   + bytes), NullWritable (zero bytes). Unknown classes REFUSE — a
   guessed deserialization is silent corruption.
-- Codec streams route to the engine's own from-spec codec family:
+- Codec streams route to the engine's codec family:
   DefaultCodec = RFC 1950 zlib wrapping of RFC 1951 deflate
-  (multimodal/deflate.py inflate + stdlib adler32 as the checksum
-  utility, the multimodal/pdf.py FlateDecode posture), GzipCodec =
+  (multimodal/deflate.py zlib_unwrap, shared with the
+  multimodal/pdf.py FlateDecode filter), GzipCodec =
   gzip members (gunzip_member), SnappyCodec / Lz4Codec = Hadoop's
   BlockCompressorStream framing (BE32 uncompressed size + BE32
-  chunk lengths) over raw snappy (multimodal/snappy.py) / raw LZ4
+  chunk lengths) over raw snappy (multimodal/snappy.py, pyarrow's
+  codec) / raw LZ4
   blocks (multimodal/lz4.py), ZStandardCodec = zstd frames
   (multimodal/zstd.py).
 

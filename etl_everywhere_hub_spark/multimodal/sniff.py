@@ -4,8 +4,8 @@ Why this belongs in the engine: a real corpus DIRECTORY is mixed —
 Common Crawl WARC.gz next to a RedPajama .jsonl.zst next to a
 Wikipedia .bz2 next to an OpenWebText .tar.xz — and file extensions
 lie (re-uploads, renamed shards, extensionless object-store keys).
-The five from-spec decoders (multimodal/deflate.py, zstd.py,
-bzip2.py, lz4.py, xz.py) each know their own magic; this module is
+The five codec modules (multimodal/deflate.py, zstd.py, bzip2.py,
+lz4.py, xz.py) each know their own magic; this module is
 the single front door an ingestion job routes through: sniff the
 leading bytes, dispatch to the right walk, return the plaintext and
 the codec name for lineage.

@@ -1,5 +1,4 @@
-"""XZ / LZMA2 / LZMA decoder, dependency-free in the decode path —
-round 12.
+"""XZ container decode through stdlib ``lzma`` (liblzma).
 
 Why this belongs in the engine: the corpus-codec family now covers
 gzip (WARC/Common Crawl, q352/q353), zstd (.jsonl.zst releases,
@@ -7,48 +6,22 @@ q357/q362), bzip2 (Wikipedia multistream, q363) and LZ4 (q365); the
 remaining compression a 100 TB text-ingestion layer meets is ``.xz``
 — OpenWebText ships as .tar.xz parts, Wikimedia publishes .xz
 mirrors of several dump families, and academic corpus drops default
-to it for its ratio. Same discipline as the siblings: implemented
-from the public format documents (the .xz File Format specification
-maintained with XZ Utils, and the LZMA specification distributed
-with the LZMA SDK), pinned against stdlib ``lzma`` — liblzma, a
-FOREIGN encoder available at query runtime (the bz2 situation, the
-strongest pin) — plus the ``xz`` CLI in tests and cluster_smoke.
+to it for its ratio.
 
-Implemented from spec:
-- LZMA range decoder: 11-bit probabilities, (range>>11)*p bound
-  split, >>5 adaptation, top-24-bit renormalization, direct bits.
-- LZMA proper: the 12-state machine; IsMatch/IsRep/IsRepG0/G1/G2/
-  IsRep0Long contexts by (state, posState); literal coder with
-  lc/lp context masking and the matched-literal path after matches;
-  length coders (choice/choice2, 8+8+256 tree split); distance
-  coding (posSlot trees per length class, SpecPos reverse trees for
-  slots 4..13, direct bits + 4-bit reverse Align tree above);
-  the rep0..rep3 recent-distance stack with shortrep; the
-  0xFFFFFFFF end marker.
-- LZMA2 chunk layer: control bytes (end / uncompressed with and
-  without dict reset / compressed with the 2-bit reset mode),
-  21-bit unpacked sizes, 16-bit packed sizes, props bytes
-  (lc+lp <= 4 validation), per-chunk range-decoder restart.
-- XZ container: stream header (magic, check-type flags, CRC32),
-  block headers (size, filter flags, optional compressed/
-  uncompressed size varints, LZMA2 filter id 0x21 with dict-size
-  props, header CRC32), block padding and per-block check
-  verification (None / CRC32 / CRC64 / SHA-256), the index
-  (record counts, unpadded-size/uncompressed-size varints, CRC32)
-  cross-checked against the blocks actually decoded, the stream
-  footer (CRC32, backward size, flag echo, 'YZ' magic), and
-  MULTI-STREAM walks with 4-byte-aligned stream padding —
-  ``xz_streams`` returns per-stream offsets, the same fan-out
-  contract as zstd_frames / bzip2_streams / lz4_frames.
-- CRC32 (IEEE reflected) and CRC64 (ECMA-182 reflected, the xz
-  variant) built here from their polynomials; SHA-256 via hashlib.
-
-There is deliberately NO from-scratch compressor: CPython ships
-``lzma`` (liblzma), so every fixture is real liblzma output across
-presets, explicit lc/lp/pb overrides, and every check type —
-hand-built streams cover the corners liblzma never emits (bad
-magics, CRC tampering, truncation, reserved flags) in
-tests/test_xz.py.
+- Each stream is decoded by one ``lzma.LZMADecompressor(FORMAT_XZ)``.
+  liblzma validates the whole stream: header and footer (magic,
+  flags, CRC32, backward size), every block header and filter chain,
+  every block check (None / CRC32 / CRC64 / SHA-256) and the index.
+  Any corruption raises ``ValueError``.
+- ``decode_stream`` returns {data, offset, end, check, n_blocks}:
+  ``end`` is just past the stream footer (from the decompressor's
+  ``unused_data``), ``check`` is the stream's check type, and
+  ``n_blocks`` is the record count of the stream index, located
+  through the footer's backward size.
+- ``xz_streams`` walks concatenated streams plus the 4-byte-aligned
+  zero padding between them and returns per-stream offsets — the
+  multistream fan-out contract shared with zstd_frames /
+  bzip2_streams / lz4_frames.
 
 Scale posture: identical to the codec family — a stream decodes
 sequentially by construction, the corpus layout is many independent
@@ -57,346 +30,31 @@ runs worker-side per Arrow batch, never on the driver.
 """
 from __future__ import annotations
 
-import hashlib
+import lzma
 import struct
 
-_XZ_MAGIC = b"\xfd7zXZ\x00"
-_FOOTER_MAGIC = b"YZ"
+from etl_everywhere_hub_spark.multimodal.deflate import decode_until_eof
+
+_CHECKS = {lzma.CHECK_NONE: "none", lzma.CHECK_CRC32: "crc32",
+           lzma.CHECK_CRC64: "crc64", lzma.CHECK_SHA256: "sha256"}
 
 
-def _make_crc32_table() -> list:
-    tab = []
-    for b in range(256):
-        c = b
-        for _ in range(8):
-            c = (c >> 1) ^ 0xEDB88320 if c & 1 else c >> 1
-        tab.append(c)
-    return tab
-
-
-def _make_crc64_table() -> list:
-    poly = 0xC96C5795D7870F42  # ECMA-182, reflected (the xz variant)
-    tab = []
-    for b in range(256):
-        c = b
-        for _ in range(8):
-            c = (c >> 1) ^ poly if c & 1 else c >> 1
-        tab.append(c)
-    return tab
-
-
-_CRC32_TAB = _make_crc32_table()
-_CRC64_TAB = _make_crc64_table()
-
-
-def crc32(data: bytes, crc: int = 0) -> int:
-    crc ^= 0xFFFFFFFF
-    for b in data:
-        crc = (crc >> 8) ^ _CRC32_TAB[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFF
-
-
-def crc64(data: bytes, crc: int = 0) -> int:
-    crc ^= 0xFFFFFFFFFFFFFFFF
-    for b in data:
-        crc = (crc >> 8) ^ _CRC64_TAB[(crc ^ b) & 0xFF]
-    return crc ^ 0xFFFFFFFFFFFFFFFF
-
-
-def _read_varint(data: bytes, pos: int) -> tuple:
-    """xz multibyte integers: 7 bits per byte, LSB-first, high bit
-    continues, max 9 bytes."""
-    out = 0
-    for i in range(9):
-        if pos >= len(data):
-            raise ValueError("xz: varint truncated")
+def _index_record_count(data: bytes, end: int) -> int:
+    """Number of records (= blocks) in the index of the stream ending
+    at ``end``. The 12-byte footer holds CRC32, backward size, flags
+    and 'YZ'; the index is (backward size + 1) * 4 bytes ending where
+    the footer starts, and opens with a 0x00 indicator followed by the
+    record count as an xz varint (7 bits per byte, LSB first)."""
+    (back,) = struct.unpack_from("<I", data, end - 8)
+    pos = end - 12 - (back + 1) * 4 + 1
+    n = shift = 0
+    while True:
         b = data[pos]
         pos += 1
-        out |= (b & 0x7F) << (7 * i)
-        if not b & 0x80:
-            if b == 0 and i > 0:
-                raise ValueError("xz: non-minimal varint")
-            return out, pos
-    raise ValueError("xz: varint longer than 9 bytes")
-
-
-# ------------------------------------------------------ LZMA proper
-_PROB_INIT = 1 << 10  # 2048/2
-
-
-class _RangeDecoder:
-    def __init__(self, data: bytes, pos: int):
-        if data[pos] != 0:
-            raise ValueError("lzma: first range-coder byte must be 0")
-        self.code = int.from_bytes(data[pos + 1 : pos + 5], "big")
-        self.range = 0xFFFFFFFF
-        self.data = data
-        self.pos = pos + 5
-
-    def _norm(self) -> None:
-        if self.range < (1 << 24):
-            if self.pos >= len(self.data):
-                raise ValueError("lzma: range coder ran off the chunk")
-            self.range = (self.range << 8) & 0xFFFFFFFF
-            self.code = ((self.code << 8) | self.data[self.pos]) & 0xFFFFFFFF
-            self.pos += 1
-
-    def bit(self, probs: list, i: int) -> int:
-        self._norm()
-        p = probs[i]
-        bound = (self.range >> 11) * p
-        if self.code < bound:
-            self.range = bound
-            probs[i] = p + ((2048 - p) >> 5)
-            return 0
-        self.code -= bound
-        self.range -= bound
-        probs[i] = p - (p >> 5)
-        return 1
-
-    def direct(self, n: int) -> int:
-        out = 0
-        for _ in range(n):
-            self._norm()
-            self.range >>= 1
-            self.code = (self.code - self.range) & 0xFFFFFFFF
-            t = 0 - (self.code >> 31)
-            self.code = (self.code + (self.range & t)) & 0xFFFFFFFF
-            out = (out << 1) + t + 1
-        return out
-
-    def tree(self, probs: list, nbits: int, off: int = 0) -> int:
-        m = 1
-        for _ in range(nbits):
-            m = (m << 1) | self.bit(probs, off + m)
-        return m - (1 << nbits)
-
-    def rtree(self, probs: list, nbits: int, off: int = 0) -> int:
-        m = 1
-        out = 0
-        for i in range(nbits):
-            b = self.bit(probs, off + m)
-            m = (m << 1) | b
-            out |= b << i
-        return out
-
-
-class _LenCoder:
-    def __init__(self):
-        self.choice = [_PROB_INIT] * 2
-        self.low = [[_PROB_INIT] * 8 for _ in range(16)]
-        self.mid = [[_PROB_INIT] * 8 for _ in range(16)]
-        self.high = [_PROB_INIT] * 256
-
-    def decode(self, rc: _RangeDecoder, pos_state: int) -> int:
-        if not rc.bit(self.choice, 0):
-            return 2 + rc.tree(self.low[pos_state], 3)
-        if not rc.bit(self.choice, 1):
-            return 10 + rc.tree(self.mid[pos_state], 3)
-        return 18 + rc.tree(self.high, 8)
-
-
-class _LzmaState:
-    """All adaptive probabilities + the state machine — reset as a
-    unit on an LZMA2 state-reset control."""
-
-    def __init__(self, lc: int, lp: int, pb: int):
-        if lc + lp > 4:
-            raise ValueError("lzma2: lc+lp > 4 is forbidden by LZMA2")
-        self.lc, self.lp, self.pb = lc, lp, pb
-        self.state = 0
-        self.rep = [0, 0, 0, 0]
-        n = 1 << 4
-        self.is_match = [_PROB_INIT] * (12 << 4)
-        self.is_rep = [_PROB_INIT] * 12
-        self.is_rep_g0 = [_PROB_INIT] * 12
-        self.is_rep_g1 = [_PROB_INIT] * 12
-        self.is_rep_g2 = [_PROB_INIT] * 12
-        self.is_rep0_long = [_PROB_INIT] * (12 << 4)
-        self.pos_slot = [[_PROB_INIT] * 64 for _ in range(4)]
-        self.spec_pos = [_PROB_INIT] * 115
-        self.align = [_PROB_INIT] * 16
-        self.len_coder = _LenCoder()
-        self.rep_len_coder = _LenCoder()
-        self.literal = [
-            [_PROB_INIT] * 0x300 for _ in range(1 << (lc + lp))
-        ]
-        _ = n
-
-
-def _lzma_decode(
-    data: bytes,
-    pos: int,
-    out: bytearray,
-    st: _LzmaState,
-    unpacked: int,
-) -> None:
-    """Decode exactly ``unpacked`` bytes of one LZMA2 compressed
-    chunk into ``out`` (which already holds the dictionary)."""
-    rc = _RangeDecoder(data, pos)
-    target = len(out) + unpacked
-    pb_mask = (1 << st.pb) - 1
-    lp_mask = (1 << st.lp) - 1
-    while len(out) < target:
-        pos_state = len(out) & pb_mask
-        if not rc.bit(st.is_match, (st.state << 4) + pos_state):
-            prev = out[-1] if out else 0
-            lit_state = ((len(out) & lp_mask) << st.lc) + (
-                prev >> (8 - st.lc) if st.lc else 0
-            )
-            probs = st.literal[lit_state]
-            if st.state < 7:
-                sym = 1
-                while sym < 0x100:
-                    sym = (sym << 1) | rc.bit(probs, sym)
-            else:
-                match_byte = out[len(out) - st.rep[0] - 1]
-                sym = 1
-                while sym < 0x100:
-                    match_bit = (match_byte >> 7) & 1
-                    match_byte = (match_byte << 1) & 0xFF
-                    b = rc.bit(probs, ((1 + match_bit) << 8) + sym)
-                    sym = (sym << 1) | b
-                    if match_bit != b:
-                        while sym < 0x100:
-                            sym = (sym << 1) | rc.bit(probs, sym)
-                        break
-            out.append(sym & 0xFF)
-            st.state = (
-                st.state - 3
-                if 3 <= st.state < 10
-                else (0 if st.state < 3 else st.state - 6)
-            )
-            continue
-        if rc.bit(st.is_rep, st.state):
-            if not out:
-                raise ValueError("lzma: rep match with empty dictionary")
-            if not rc.bit(st.is_rep_g0, st.state):
-                if not rc.bit(
-                    st.is_rep0_long, (st.state << 4) + pos_state
-                ):
-                    st.state = 9 if st.state < 7 else 11
-                    out.append(out[len(out) - st.rep[0] - 1])
-                    continue
-                length = st.rep_len_coder.decode(rc, pos_state)
-            else:
-                if not rc.bit(st.is_rep_g1, st.state):
-                    dist = st.rep[1]
-                else:
-                    if not rc.bit(st.is_rep_g2, st.state):
-                        dist = st.rep[2]
-                    else:
-                        dist = st.rep[3]
-                        st.rep[3] = st.rep[2]
-                    st.rep[2] = st.rep[1]
-                st.rep[1] = st.rep[0]
-                st.rep[0] = dist
-                length = st.rep_len_coder.decode(rc, pos_state)
-            st.state = 8 if st.state < 7 else 11
-        else:
-            st.rep[3], st.rep[2], st.rep[1] = st.rep[2], st.rep[1], st.rep[0]
-            length = st.len_coder.decode(rc, pos_state)
-            st.state = 7 if st.state < 7 else 10
-            slot = rc.tree(st.pos_slot[min(length - 2, 3)], 6)
-            if slot < 4:
-                dist = slot
-            else:
-                nd = (slot >> 1) - 1
-                dist = (2 | (slot & 1)) << nd
-                if slot < 14:
-                    # SpecPos reverse tree based at dist - slot - 1
-                    # (the LZMA reference decoder's pointer origin)
-                    dist += rc.rtree(st.spec_pos, nd, dist - slot - 1)
-                else:
-                    dist += rc.direct(nd - 4) << 4
-                    dist += rc.rtree(st.align, 4)
-            if dist == 0xFFFFFFFF:
-                raise ValueError(
-                    "lzma: end marker inside a sized LZMA2 chunk"
-                )
-            st.rep[0] = dist
-        if st.rep[0] + 1 > len(out):
-            raise ValueError("lzma: match distance beyond dictionary")
-        if len(out) + length > target:
-            raise ValueError("lzma: match overruns the declared chunk size")
-        start = len(out) - st.rep[0] - 1
-        for i in range(length):
-            out.append(out[start + i])
-    if rc.pos > len(data):
-        raise ValueError("lzma: chunk overread")
-
-
-def _parse_props(b: int) -> tuple:
-    if b >= 9 * 5 * 5:
-        raise ValueError("lzma2: invalid props byte")
-    lc = b % 9
-    b //= 9
-    lp = b % 5
-    pb = b // 5
-    return lc, lp, pb
-
-
-def lzma2_decode(data: bytes, pos: int, end: int) -> bytes:
-    """The LZMA2 chunk walk for one xz block's compressed data."""
-    out = bytearray()
-    st = None
-    props = None
-    while True:
-        if pos >= end:
-            raise ValueError("lzma2: missing end-of-stream control byte")
-        ctrl = data[pos]
-        pos += 1
-        if ctrl == 0:
-            break
-        if ctrl in (1, 2):  # uncompressed chunk (1 = dict reset)
-            size = struct.unpack_from(">H", data, pos)[0] + 1
-            pos += 2
-            if pos + size > end:
-                raise ValueError("lzma2: uncompressed chunk truncated")
-            out += data[pos : pos + size]
-            pos += size
-            st = None  # next compressed chunk must reset state
-            continue
-        if ctrl < 0x80:
-            raise ValueError(f"lzma2: reserved control byte {ctrl:#04x}")
-        unpacked = ((ctrl & 0x1F) << 16) + struct.unpack_from(
-            ">H", data, pos
-        )[0] + 1
-        packed = struct.unpack_from(">H", data, pos + 2)[0] + 1
-        pos += 4
-        reset = (ctrl >> 5) & 0x3
-        if reset >= 2:
-            props = _parse_props(data[pos])
-            pos += 1
-        if reset >= 1 or st is None:
-            if props is None:
-                raise ValueError("lzma2: state reset before any props")
-            st = _LzmaState(*props)
-        if pos + packed > end:
-            raise ValueError("lzma2: compressed chunk truncated")
-        _lzma_decode(data[: pos + packed], pos, out, st, unpacked)
-        pos += packed
-    if pos != end:
-        raise ValueError("lzma2: trailing bytes after end control")
-    return bytes(out)
-
-
-# --------------------------------------------------------- container
-_CHECKS = {0: ("none", 0), 1: ("crc32", 4), 4: ("crc64", 8),
-           10: ("sha256", 32)}
-
-
-def _verify_check(kind: str, payload: bytes, field: bytes) -> None:
-    if kind == "none":
-        return
-    if kind == "crc32":
-        ok = struct.unpack("<I", field)[0] == crc32(payload)
-    elif kind == "crc64":
-        ok = struct.unpack("<Q", field)[0] == crc64(payload)
-    else:
-        ok = field == hashlib.sha256(payload).digest()
-    if not ok:
-        raise ValueError(f"xz: block {kind} check mismatch")
+        n |= (b & 0x7F) << shift
+        if b < 0x80:
+            return n
+        shift += 7
 
 
 def decode_stream(data: bytes, pos: int = 0) -> dict:
@@ -404,159 +62,19 @@ def decode_stream(data: bytes, pos: int = 0) -> dict:
     offset, end, check, n_blocks} with ``end`` just past the stream
     footer — the next stream (or its 4-aligned padding) starts
     there: the multistream split-point contract."""
-    if data[pos : pos + 6] != _XZ_MAGIC:
-        raise ValueError(f"xz: bad stream magic at byte {pos}")
-    flags = data[pos + 6 : pos + 8]
-    if flags[0] != 0 or flags[1] & 0xF0:
-        raise ValueError("xz: reserved stream flag bits set")
-    check_id = flags[1] & 0x0F
-    if check_id not in _CHECKS:
-        raise ValueError(f"xz: unsupported check id {check_id}")
-    check_kind, check_len = _CHECKS[check_id]
-    if struct.unpack_from("<I", data, pos + 8)[0] != crc32(flags):
-        raise ValueError("xz: stream header CRC mismatch")
-    p = pos + 12
-    out = bytearray()
-    records = []  # (unpadded_size, uncompressed_size) per block
-    while True:
-        first = data[p]
-        if first == 0:  # index indicator
-            break
-        hdr_start = p
-        hdr_size = (first + 1) * 4
-        hdr = data[p : p + hdr_size]
-        if struct.unpack_from("<I", hdr, hdr_size - 4)[0] != crc32(
-            hdr[: hdr_size - 4]
-        ):
-            raise ValueError("xz: block header CRC mismatch")
-        bflags = hdr[1]
-        n_filters = (bflags & 0x03) + 1
-        if bflags & 0x3C:
-            raise ValueError("xz: reserved block flag bits set")
-        q = 2
-        comp_size = unc_size = None
-        if bflags & 0x40:
-            comp_size, q = _read_varint(hdr, q)
-        if bflags & 0x80:
-            unc_size, q = _read_varint(hdr, q)
-        lzma2_dict = None
-        for _ in range(n_filters):
-            fid, q = _read_varint(hdr, q)
-            psize, q = _read_varint(hdr, q)
-            fprops = hdr[q : q + psize]
-            q += psize
-            if fid == 0x21:
-                if psize != 1:
-                    raise ValueError("xz: LZMA2 props must be 1 byte")
-                lzma2_dict = fprops[0]
-            else:
-                raise ValueError(
-                    f"xz: unsupported filter id {fid:#x} (only LZMA2)"
-                )
-        if lzma2_dict is None:
-            raise ValueError("xz: block without an LZMA2 filter")
-        if lzma2_dict & 0xC0:
-            raise ValueError("xz: reserved dict-size bits set")
-        p += hdr_size
-        # compressed data: bounded by declared size if present, else
-        # scan via the LZMA2 chunk walk itself
-        cstart = p
-        if comp_size is not None:
-            cend = cstart + comp_size
-            block_out = lzma2_decode(data, cstart, cend)
-        else:
-            block_out, cend = _lzma2_decode_scan(data, cstart)
-        if unc_size is not None and len(block_out) != unc_size:
-            raise ValueError("xz: block uncompressed-size mismatch")
-        p = cend
-        while (p - hdr_start) % 4:
-            if data[p] != 0:
-                raise ValueError("xz: non-zero block padding")
-            p += 1
-        _verify_check(check_kind, block_out, data[p : p + check_len])
-        p += check_len
-        records.append((cend - hdr_start + 0, len(block_out)))
-        # unpadded size = header + compressed + check (no padding)
-        records[-1] = (
-            (hdr_size + (cend - cstart) + check_len), len(block_out)
-        )
-        out += block_out
-    # index
-    idx_start = p
-    p += 1
-    n_rec, p = _read_varint(data, p)
-    if n_rec != len(records):
-        raise ValueError("xz: index record count mismatch")
-    for want_unpadded, want_unc in records:
-        got_unpadded, p = _read_varint(data, p)
-        got_unc, p = _read_varint(data, p)
-        if (got_unpadded, got_unc) != (want_unpadded, want_unc):
-            raise ValueError("xz: index record disagrees with block")
-    while (p - idx_start) % 4:
-        if data[p] != 0:
-            raise ValueError("xz: non-zero index padding")
-        p += 1
-    if struct.unpack_from("<I", data, p)[0] != crc32(data[idx_start:p]):
-        raise ValueError("xz: index CRC mismatch")
-    p += 4
-    index_size = p - idx_start
-    # footer: CRC32(backward_size + flags), backward size, flags, YZ
-    f_crc = struct.unpack_from("<I", data, p)[0]
-    back = data[p + 4 : p + 8]
-    fflags = data[p + 8 : p + 10]
-    if data[p + 10 : p + 12] != _FOOTER_MAGIC:
-        raise ValueError("xz: bad footer magic")
-    if f_crc != crc32(back + fflags):
-        raise ValueError("xz: footer CRC mismatch")
-    if fflags != flags:
-        raise ValueError("xz: footer flags disagree with header")
-    if (struct.unpack("<I", back)[0] + 1) * 4 != index_size:
-        raise ValueError("xz: footer backward size disagrees with index")
+    dec = lzma.LZMADecompressor(lzma.FORMAT_XZ)
+    out, end = decode_until_eof(dec, data, pos, "xz")
+    check = _CHECKS.get(dec.check)
+    if check is None:
+        # liblzma decodes reserved check types without verifying them
+        raise ValueError(f"xz: unsupported check id {dec.check}")
     return {
-        "data": bytes(out),
+        "data": out,
         "offset": pos,
-        "end": p + 12,
-        "check": check_kind,
-        "n_blocks": len(records),
+        "end": end,
+        "check": check,
+        "n_blocks": _index_record_count(data, end),
     }
-
-
-def _lzma2_decode_scan(data: bytes, pos: int) -> tuple:
-    """LZMA2 walk when the block header omits the compressed size:
-    the chunk structure itself delimits the data; returns
-    (plaintext, end_pos just past the 0x00 end control)."""
-    out = bytearray()
-    st = None
-    props = None
-    while True:
-        ctrl = data[pos]
-        pos += 1
-        if ctrl == 0:
-            return bytes(out), pos
-        if ctrl in (1, 2):
-            size = struct.unpack_from(">H", data, pos)[0] + 1
-            pos += 2
-            out += data[pos : pos + size]
-            pos += size
-            st = None
-            continue
-        if ctrl < 0x80:
-            raise ValueError(f"lzma2: reserved control byte {ctrl:#04x}")
-        unpacked = ((ctrl & 0x1F) << 16) + struct.unpack_from(
-            ">H", data, pos
-        )[0] + 1
-        packed = struct.unpack_from(">H", data, pos + 2)[0] + 1
-        pos += 4
-        reset = (ctrl >> 5) & 0x3
-        if reset >= 2:
-            props = _parse_props(data[pos])
-            pos += 1
-        if reset >= 1 or st is None:
-            if props is None:
-                raise ValueError("lzma2: state reset before any props")
-            st = _LzmaState(*props)
-        _lzma_decode(data[: pos + packed], pos, out, st, unpacked)
-        pos += packed
 
 
 def xz_streams(data: bytes) -> list:

@@ -1,4 +1,4 @@
-"""ZIP archive walk (APPNOTE.TXT format), dependency-free — round 12.
+"""ZIP archive walk (APPNOTE.TXT format).
 
 Why this belongs in the engine: ZIP is the most common "here is a
 dataset" container on the public internet — Kaggle exports, agency
@@ -21,11 +21,12 @@ specification):
   method must agree with the directory — an inconsistent pair is how
   zip-slip/smuggling bugs hide, so it REFUSES); data descriptors
   (bit 3) tolerated since sizes come from the directory.
-- Methods: 0 stored, 8 DEFLATE via the engine's own
-  multimodal/deflate.py inflate. Anything else refuses loudly.
-- CRC-32 (the IEEE polynomial, the table-driven implementation
-  already in multimodal/xz.py) verified on every decoded member —
-  silence is the only wrong answer.
+- Methods: 0 stored, 8 DEFLATE (stdlib ``zlib`` through
+  multimodal/deflate.py inflate), 12 bzip2 (multimodal/bzip2.py) and
+  14 LZMA (raw LZMA1 through stdlib ``lzma``, as CPython's zipfile
+  decodes it). Anything else refuses loudly.
+- CRC-32 (the IEEE polynomial, stdlib ``zlib.crc32``) verified on
+  every decoded member — silence is the only wrong answer.
 
 The CENTRAL DIRECTORY is why ZIP matters at scale: unlike tar, the
 member list lives at the FILE TAIL with absolute offsets, so a
@@ -42,9 +43,9 @@ method mismatch, truncated EOCD) is loud.
 """
 from __future__ import annotations
 
+import lzma
 import struct
-
-from etl_everywhere_hub_spark.multimodal.xz import crc32
+from zlib import crc32
 
 _EOCD = b"PK\x05\x06"
 _Z64_LOC = b"PK\x06\x07"
@@ -160,8 +161,7 @@ def zip_member(data: bytes, entry: dict) -> bytes:
         plain = raw
     elif entry["method"] == "deflate":
         from etl_everywhere_hub_spark.multimodal.deflate import inflate
-        plain, _ = inflate(raw, 0)
-        plain = bytes(plain)
+        plain, _ = inflate(raw)
     elif entry["method"] == "bzip2":
         from etl_everywhere_hub_spark.multimodal.bzip2 import decompress
         plain = decompress(raw)
@@ -171,25 +171,23 @@ def zip_member(data: bytes, entry: dict) -> bytes:
         # LZMA1 stream; the directory's uncompressed size bounds the
         # decode exactly, so the optional end-of-stream marker (flag
         # bit 1) never needs consuming
-        from etl_everywhere_hub_spark.multimodal.xz import (
-            _lzma_decode,
-            _LzmaState,
-        )
         if len(raw) < 9:
             raise ValueError("zip: lzma member too short")
         (psize,) = struct.unpack_from("<H", raw, 2)
         if psize != 5:
             raise ValueError(f"zip: lzma props size {psize} != 5")
-        pb_byte = raw[4]
-        if pb_byte >= 9 * 5 * 5:
+        props, dict_size = struct.unpack_from("<BI", raw, 4)
+        if props >= 9 * 5 * 5:
             raise ValueError("zip: invalid lzma properties byte")
-        lc = pb_byte % 9
-        lp = (pb_byte // 9) % 5
-        pb = pb_byte // 45
-        out = bytearray()
-        _lzma_decode(raw, 9, out, _LzmaState(lc, lp, pb),
-                     entry["uncompressed_size"])
-        plain = bytes(out)
+        lzma1 = {"id": lzma.FILTER_LZMA1, "lc": props % 9,
+                 "lp": props // 9 % 5, "pb": props // 45,
+                 "dict_size": dict_size}
+        try:
+            dec = lzma.LZMADecompressor(lzma.FORMAT_RAW, filters=[lzma1])
+            plain = dec.decompress(
+                raw[9:], max_length=entry["uncompressed_size"])
+        except lzma.LZMAError as e:
+            raise ValueError(f"zip: lzma {e}") from None
     else:
         raise ValueError(
             f"zip: unsupported method {entry['method']!r}")

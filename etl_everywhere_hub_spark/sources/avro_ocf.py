@@ -14,23 +14,22 @@ Container Files". Reference analog: none (the 276-line task.ts has no
 file formats) — this is north-star ingestion surface, same posture as
 multimodal/deflate.py / zstd.py.
 
-The container's codec set is EXACTLY the from-spec codec family this
-repo already implements, and the reader routes to it:
+The container's codec set is EXACTLY the codec family this repo
+already carries, and the reader routes to it:
 
   null       -> identity
-  deflate    -> multimodal/deflate.py  inflate() (raw RFC 1951)
+  deflate    -> multimodal/deflate.py  inflate() (raw RFC 1951, zlib)
   snappy     -> multimodal/snappy.py   snappy_decompress_raw()
-                + the spec's 4-byte big-endian CRC-32 (IEEE; the
-                table-driven crc32 from multimodal/xz.py) of the
-                UNCOMPRESSED bytes appended to each block
+                + the spec's 4-byte big-endian CRC-32 (IEEE; stdlib
+                zlib.crc32) of the UNCOMPRESSED bytes appended to
+                each block
   bzip2      -> multimodal/bzip2.py    decompress()
-  xz         -> multimodal/xz.py       decompress()
+  xz         -> multimodal/xz.py       decompress() (liblzma)
   zstandard  -> multimodal/zstd.py     decompress()
 
 On the write side deflate/snappy/zstandard use the engine's own
-encoders; bzip2/xz use stdlib ``bz2``/``lzma`` as FOREIGN encoders
-(the same posture as tests/test_xz.py fixtures — our from-spec
-decoders consume their output). Spark's own JVM Avro library
+encoders; bzip2/xz use stdlib ``bz2``/``lzma`` (the bzip2 side is a
+FOREIGN encoder for the from-spec decoder). Spark's own JVM Avro library
 (avro-1.12.1.jar on this classpath) is the foreign pin for the
 CONTAINER itself: tests/test_avro_ocf.py writes with
 org.apache.avro.file.DataFileWriter under all six CodecFactory
@@ -75,6 +74,7 @@ from __future__ import annotations
 import hashlib
 import json
 import struct
+from zlib import crc32
 
 _PRIMITIVES = {
     "null", "boolean", "int", "long", "float", "double", "bytes", "string",
@@ -403,13 +403,11 @@ def _decode_codec(codec: str, data: bytes) -> bytes:
         return data
     if codec == "deflate":
         from etl_everywhere_hub_spark.multimodal.deflate import inflate
-        out, _end = inflate(data, 0)
-        return bytes(out)
+        return inflate(data)[0]
     if codec == "snappy":
         from etl_everywhere_hub_spark.multimodal.snappy import (
             snappy_decompress_raw,
         )
-        from etl_everywhere_hub_spark.multimodal.xz import crc32
         if len(data) < 4:
             raise ValueError("avro: snappy block shorter than its CRC")
         plain = snappy_decompress_raw(data[:-4])
@@ -439,13 +437,12 @@ def _encode_codec(codec: str, data: bytes) -> bytes:
         from etl_everywhere_hub_spark.multimodal.snappy import (
             snappy_compress_raw,
         )
-        from etl_everywhere_hub_spark.multimodal.xz import crc32
         return snappy_compress_raw(data) + struct.pack(">I", crc32(data))
     if codec == "bzip2":
         import bz2  # stdlib foreign encoder; decode side is ours
         return bz2.compress(data, 9)
     if codec == "xz":
-        import lzma  # stdlib foreign encoder; decode side is ours
+        import lzma
         return lzma.compress(data, format=lzma.FORMAT_XZ)
     if codec == "zstandard":
         from etl_everywhere_hub_spark.multimodal.zstd import zstd_compress

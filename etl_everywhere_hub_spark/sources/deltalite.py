@@ -195,12 +195,6 @@ def _json_safe(v):
     return v
 
 
-def _cmp_key(v):
-    """Totally-ordered comparison key across the JSON-safe value
-    domain (numbers with numbers, strings with strings)."""
-    return v
-
-
 def zorder_key(df: DataFrame, cols: list, bits: int = 8) -> Column:
     """Morton (Z-order) key Column for ``cols`` over ``df``'s data.
 

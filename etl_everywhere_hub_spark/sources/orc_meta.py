@@ -20,9 +20,9 @@ and the orc_proto definitions it embeds:
   compression framing.
 - Compression framing: 3-byte little-endian chunk headers,
   ``(chunkLength << 1) | isOriginal`` — original chunks pass
-  through, compressed chunks route to the engine's OWN from-spec
-  codec family (ZLIB means RAW DEFLATE -> multimodal/deflate.py,
-  SNAPPY raw blocks -> multimodal/snappy.py, LZ4 raw block ->
+  through, compressed chunks route to the engine's codec family
+  (ZLIB means RAW DEFLATE -> multimodal/deflate.py over stdlib zlib,
+  SNAPPY raw blocks -> multimodal/snappy.py over pyarrow, LZ4 raw block ->
   multimodal/lz4.py, ZSTD frames -> multimodal/zstd.py).
 - Protobuf messages decoded through the SAME generic wire walk
   tf.Example uses (multimodal/tfrecord.py:pb_fields — one protobuf

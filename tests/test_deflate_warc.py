@@ -71,16 +71,34 @@ def test_window_spans_block_boundaries():
 def test_inflate_error_paths():
     with pytest.raises(ValueError, match="truncated"):
         inflate(b"")
-    with pytest.raises(ValueError, match="reserved block type"):
+    with pytest.raises(ValueError, match="invalid block type"):
         inflate(bytes([0b111]))  # bfinal=1 btype=3
     # stored LEN/NLEN mismatch
     bad = bytes([0b001]) + struct.pack("<HH", 5, 5)
-    with pytest.raises(ValueError, match="LEN/NLEN"):
+    with pytest.raises(ValueError, match="invalid stored block lengths"):
         inflate(bad)
     # distance beyond window start
     good = deflate(b"abcabc", btype=1)
     dec, _ = inflate(good)
     assert dec == b"abcabc"
+
+
+@pytest.mark.parametrize("max_len", [7, 15])
+def test_depth_limited_codes_are_complete(max_len):
+    # Frequencies whose plain Huffman tree is deeper than the cap force
+    # the depth repair; its lengths must still form a COMPLETE prefix
+    # code (Kraft sum exactly 1), or zlib rejects the block header with
+    # "invalid code lengths set" (max_len 7 is the code-length code).
+    from etl_everywhere_hub_spark.multimodal.deflate import _limited_huffman
+
+    fib = [1, 1]
+    while len(fib) < 24:
+        fib.append(fib[-1] + fib[-2])
+    for shape in (fib, [2 ** i for i in range(20)]):
+        for n in range(max_len + 2, len(shape) + 1):
+            lens = _limited_huffman(dict(enumerate(shape[:n])), max_len)
+            assert max(lens) <= max_len
+            assert sum(2 ** (max_len - x) for x in lens if x) == 2 ** max_len
 
 
 def test_gzip_member_fields_and_crc():

@@ -67,12 +67,36 @@ def test_raw_roundtrips_and_hand_vectors():
 
 
 def test_raw_errors():
-    with pytest.raises(ValueError, match="offset outside"):
+    with pytest.raises(ValueError, match="Corrupt snappy"):
         snappy_decompress_raw(bytes([4, 0x00, ord("x"), 1 | (0 << 2), 9]))
-    with pytest.raises(ValueError, match="preamble says"):
+    with pytest.raises(ValueError, match="Corrupt snappy"):
         snappy_decompress_raw(bytes([9, 0x00, ord("x")]))
-    with pytest.raises(ValueError, match="literal body truncated"):
+    with pytest.raises(ValueError, match="Corrupt snappy"):
         snappy_decompress_raw(bytes([9, 0x08, ord("x")]))
+
+
+def test_raw_hostile_preamble_is_refused():
+    # A 5-byte preamble claiming 4 GiB - 1 in front of a 2-byte body:
+    # refused before the codec allocates the claimed size.
+    with pytest.raises(ValueError, match="preamble says 4294967295 bytes"):
+        snappy_decompress_raw(b"\xff\xff\xff\xff\x0f" + b"\x00x")
+    # The densest valid block still decodes: one literal, then 3-byte
+    # copies of 64 bytes each, right at the expansion bound.
+    def uvarint(v: int) -> bytes:
+        out = bytearray()
+        while v >= 0x80:
+            out.append((v & 0x7F) | 0x80)
+            v >>= 7
+        return bytes(out + bytes([v]))
+
+    k = 1000
+    body = bytes([0x00, ord("x")]) + bytes([2 | (63 << 2), 1, 0]) * k
+    n = 1 + 64 * k
+    assert snappy_decompress_raw(uvarint(n) + body) == b"x" * n
+    # one more byte than the bound allows is refused
+    over = len(body) * 64 // 3 + 1
+    with pytest.raises(ValueError, match=f"preamble says {over} bytes"):
+        snappy_decompress_raw(uvarint(over) + body)
 
 
 def test_hadoop_roundtrip_multi_block():

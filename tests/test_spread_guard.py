@@ -2,7 +2,8 @@
 df.rdd.getNumPartitions() in every spread guard (VERDICT r12 #2/#6),
 the spread guards' no-op paths, the session-keyed memos (WeakSet
 configure_session memo, weak-keyed table memo), and the
-case-insensitive asof_join payload lookup (ADVICE r12)."""
+case-insensitive asof_join payload lookup (ADVICE r12), which raises
+on an ambiguous name as the analyzer does."""
 
 from __future__ import annotations
 
@@ -70,8 +71,8 @@ def test_non_file_frame_counts_as_at_scale(spark):
 
 def test_estimate_survives_zero_open_cost_on_empty_files(spark, tmp_path):
     # openCostInBytes=0 with only empty input files made every term of
-    # maxSplitBytes zero -> divmod(0, 0). A new session reads its own
-    # split confs (the conf memo is per session object).
+    # maxSplitBytes zero -> divmod(0, 0). A new session keeps the conf
+    # change off the shared fixture session.
     for i in range(3):
         (tmp_path / f"part-{i}.txt").write_bytes(b"")
     s2 = spark.newSession()
@@ -79,6 +80,23 @@ def test_estimate_survives_zero_open_cost_on_empty_files(spark, tmp_path):
     df = s2.read.text(str(tmp_path))
     assert len(df.inputFiles()) == 3
     assert estimated_scan_splits(df) == 0  # nothing to read, no crash
+
+
+def test_estimate_follows_split_conf_change_in_same_session(spark, multisplit_parquet):
+    # The split confs are read on every call, not remembered per
+    # session: a later spark.conf.set moves the estimate with Spark.
+    df = spark.read.parquet(multisplit_parquet)
+    key = "spark.sql.files.maxPartitionBytes"
+    keep = spark.conf.get(key)
+    before = estimated_scan_splits(df)
+    try:
+        spark.conf.set(key, str(1 << 20))
+        after = estimated_scan_splits(df)
+        assert after > before
+        assert after == spark.read.parquet(multisplit_parquet).rdd.getNumPartitions()
+    finally:
+        spark.conf.set(key, keep)
+    assert estimated_scan_splits(df) == before
 
 
 def test_spread_cached_noops_at_machine_parallelism(spark):
@@ -168,3 +186,18 @@ def test_asof_join_payload_names_case_insensitive(spark):
         (r["k"], r["t"], r["asof_PX"]) for r in upper
     )
     assert sorted(r["asof_px"] for r in exact) == [100.0, 200.0]
+
+
+def test_asof_join_ambiguous_case_folded_payload_raises(spark):
+    # ``px`` folds onto both ``Px`` and ``pX``: the analyzer refuses to
+    # pick one, and asof_join must not pick one silently either.
+    from pyspark.errors import AnalysisException
+
+    from etl_everywhere_hub_spark.operators.asof import asof_join
+
+    left = spark.createDataFrame([(1, 10)], "k long, t long")
+    right = spark.createDataFrame(
+        [(1, 5, 100.0, 200.0)], "k long, rt long, Px double, pX double"
+    )
+    with pytest.raises(AnalysisException, match="AMBIGUOUS_REFERENCE"):
+        asof_join(left, right, "k", "t", "rt", ["px"]).collect()

@@ -1,9 +1,9 @@
-"""XZ/LZMA2/LZMA decoder tests (multimodal/xz.py) and the ustar walk
-(multimodal/tar.py): stdlib ``lzma`` (liblzma) as FOREIGN encoder
-across presets / check types / explicit lc-lp-pb, the xz CLI,
-CRC32/CRC64 polynomial pins, multistream walks with padding,
-multi-chunk LZMA2 inputs, tar member walks incl. through .tar.xz,
-and tampered-bitstream error paths."""
+"""XZ stream walk tests (multimodal/xz.py) and the ustar walk
+(multimodal/tar.py): liblzma-written streams across presets / check
+types / explicit lc-lp-pb / filter chains, the xz CLI, per-stream
+block counts, multistream walks with padding, multi-chunk LZMA2
+inputs, tar member walks incl. through .tar.xz, and tampered-stream
+error paths."""
 
 from __future__ import annotations
 
@@ -18,8 +18,6 @@ import pytest
 
 from etl_everywhere_hub_spark.multimodal.tar import tar_members
 from etl_everywhere_hub_spark.multimodal.xz import (
-    crc32,
-    crc64,
     decode_stream,
     decompress,
     xz_streams,
@@ -46,17 +44,6 @@ _CASES = [
     _pseudo(60000),
     (b"token " * 3000) + _pseudo(64),
 ]
-
-
-# -------------------------------------------------------------- CRCs
-def test_crc_polynomial_pins():
-    # CRC-32/ISO-HDLC and CRC-64/XZ published check values for
-    # "123456789"
-    assert crc32(b"123456789") == 0xCBF43926
-    assert crc64(b"123456789") == 0x995DC9BBDF1939FA
-    import zlib
-
-    assert crc32(b"etl everywhere") == zlib.crc32(b"etl everywhere")
 
 
 # ------------------------------------------------------ foreign pins
@@ -134,15 +121,15 @@ def test_multistream_walk_and_padding():
 def test_tampered_streams():
     plain = b"tamper target " * 100
     good = lzma.compress(plain, check=lzma.CHECK_CRC32)
-    with pytest.raises(ValueError, match="stream magic"):
+    with pytest.raises(ValueError, match="format not supported"):
         decode_stream(b"\x00" + good[1:])
     bad = bytearray(good)
     bad[8] ^= 0x01  # stream header CRC field
-    with pytest.raises(ValueError, match="header CRC"):
+    with pytest.raises(ValueError, match="Corrupt input data"):
         decode_stream(bytes(bad))
     bad = bytearray(good)
     bad[-1] ^= 0xFF  # footer magic 'YZ'
-    with pytest.raises(ValueError, match="footer magic"):
+    with pytest.raises(ValueError, match="Corrupt input data"):
         decode_stream(bytes(bad))
     # flip one payload byte: either the LZMA stream degenerates or
     # the block check catches it — silence is the only wrong answer
@@ -154,14 +141,49 @@ def test_tampered_streams():
         decode_stream(good[: len(good) - 8])
 
 
-def test_unsupported_surfaces_are_loud():
-    # delta-filtered stream: filter id != LZMA2
+def test_delta_filter_chain_decodes():
+    # liblzma decodes every filter chain the format defines, so a
+    # delta + LZMA2 stream decodes like a plain one
+    plain = b"abcdef" * 100
     filt = [{"id": lzma.FILTER_DELTA, "dist": 1},
             {"id": lzma.FILTER_LZMA2, "preset": 1}]
-    comp = lzma.compress(b"abcdef" * 100, format=lzma.FORMAT_XZ,
-                         filters=filt)
-    with pytest.raises(ValueError, match="unsupported filter"):
-        decode_stream(comp)
+    comp = lzma.compress(plain, format=lzma.FORMAT_XZ, filters=filt)
+    st = decode_stream(comp)
+    assert st["data"] == plain and st["end"] == len(comp)
+
+
+def test_reserved_check_id_is_loud():
+    # liblzma decodes a reserved check type without verifying it; the
+    # walk refuses instead of returning unverified bytes. Check id 2 is
+    # reserved with a 4-byte field, the CRC32 layout, so only the flag
+    # (header and footer) and the two CRCs over it change.
+    import struct
+    import zlib
+
+    bad = bytearray(lzma.compress(b"unverified " * 50,
+                                  check=lzma.CHECK_CRC32))
+    flags = b"\x00\x02"
+    bad[6:8] = flags
+    bad[8:12] = struct.pack("<I", zlib.crc32(flags))
+    bad[-4:-2] = flags
+    bad[-12:-8] = struct.pack("<I", zlib.crc32(bytes(bad[-8:-2])))
+    with pytest.raises(ValueError, match="unsupported check id 2"):
+        decode_stream(bytes(bad))
+
+
+def test_block_count_from_the_index():
+    # one block per 1 KiB of input: n_blocks comes from the index
+    # record count, located through the footer's backward size
+    plain = _pseudo(6 * 1024)
+    filt = [{"id": lzma.FILTER_LZMA2, "preset": 1}]
+    comp = lzma.compress(plain, format=lzma.FORMAT_XZ, filters=filt)
+    assert decode_stream(comp)["n_blocks"] == 1
+    if _CLI is None:
+        pytest.skip("no xz CLI in PATH")
+    comp = subprocess.run(["xz", "-c", "-1", "-T1", "--block-size=1024"],
+                          input=plain, capture_output=True).stdout
+    st = decode_stream(comp)
+    assert st["data"] == plain and st["n_blocks"] == 6
 
 
 # ---------------------------------------------------------- tar walk

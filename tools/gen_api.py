@@ -55,15 +55,15 @@ SECTIONS = [
     ("MP4/ISO-BMFF demux", "etl_everywhere_hub_spark.multimodal.mp4"),
     ("Audio codecs (WAV/ADPCM/MP3)", "etl_everywhere_hub_spark.multimodal.audio"),
     ("H.264 parameter sets (SPS/PPS/avcC)", "etl_everywhere_hub_spark.multimodal.h264"),
-    ("DEFLATE + gzip codec", "etl_everywhere_hub_spark.multimodal.deflate"),
+    ("DEFLATE encoder + gzip/zlib framing (zlib inflate)", "etl_everywhere_hub_spark.multimodal.deflate"),
     ("WARC record codec", "etl_everywhere_hub_spark.multimodal.warc"),
     ("Zstandard codec (RFC 8878)", "etl_everywhere_hub_spark.multimodal.zstd"),
     ("PDF text extraction", "etl_everywhere_hub_spark.multimodal.pdf"),
     ("bzip2 decoder", "etl_everywhere_hub_spark.multimodal.bzip2"),
     ("LZ4 codec", "etl_everywhere_hub_spark.multimodal.lz4"),
-    ("XZ/LZMA decoder", "etl_everywhere_hub_spark.multimodal.xz"),
+    ("XZ multistream walk (liblzma decode)", "etl_everywhere_hub_spark.multimodal.xz"),
     ("ustar member walk", "etl_everywhere_hub_spark.multimodal.tar"),
-    ("Snappy codec", "etl_everywhere_hub_spark.multimodal.snappy"),
+    ("Snappy encoder + Hadoop/framed walks (pyarrow raw decode)", "etl_everywhere_hub_spark.multimodal.snappy"),
     ("Codec sniffing", "etl_everywhere_hub_spark.multimodal.sniff"),
     ("Wikipedia dump fixtures + wikitext strip",
      "etl_everywhere_hub_spark.functions.wikitext"),
