@@ -19,6 +19,7 @@ import shutil
 import tempfile
 from typing import Iterable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -212,7 +213,10 @@ def stream_events_kafka(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_to_table(stream_df: DataFrame, output_mode: str = "append") -> DataFrame:
     """Drain a (bounded) stream into a memory sink and return the result.
 
-    Trigger.AvailableNow + awaitTermination → deterministic contents.
+    Trigger.AvailableNow + awaitTermination → deterministic contents. The
+    session is left as it was found: the shuffle-partition clamp below is
+    undone and the sink's temp view is dropped (the returned frame is
+    already resolved against the sink's data).
     """
     global _sink_counter
     _sink_counter += 1
@@ -220,11 +224,14 @@ def run_to_table(stream_df: DataFrame, output_mode: str = "append") -> DataFrame
     # Stateful streaming exchanges bypass AQE coalescing and freeze the
     # partition count into the checkpoint, so a session left at the 200
     # default pays 200 state-store tasks per micro-batch regardless of
-    # volume. Clamp to 4× parallelism (skew headroom) before start; a
-    # cluster deployment sizes this via SPARK_SHUFFLE_PARTITIONS.
+    # volume. Clamp to 4× parallelism (skew headroom) before start; the
+    # count is fixed once the query has started, so the caller's value
+    # comes back after stop. A cluster deployment sizes this via
+    # SPARK_SHUFFLE_PARTITIONS.
     spark = stream_df.sparkSession
     cap = 4 * spark.sparkContext.defaultParallelism
-    if int(spark.conf.get("spark.sql.shuffle.partitions")) > cap:
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    if int(parts) > cap:
         spark.conf.set("spark.sql.shuffle.partitions", str(cap))
     # Nothing resumes this checkpoint (the sink is an in-memory table
     # drained in one call), so it is deleted once the query has stopped.
@@ -243,8 +250,12 @@ def run_to_table(stream_df: DataFrame, output_mode: str = "append") -> DataFrame
         finally:
             q.stop()
     finally:
+        if int(parts) > cap:
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return stream_df.sparkSession.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def tumbling_window_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -334,19 +345,15 @@ def _device_cache_fn(
         if pdf.empty:
             continue
         # explicit µs unit — Arrow may hand us datetime64[ns] or [us]
-        ts_us = pdf["ts"].astype("datetime64[us]").astype("int64")
+        ts_us = pdf["ts"].astype("datetime64[us]").to_numpy("int64")
+        eid = pdf["event_id"].to_numpy()
         # newest by (ts, event_id) — deterministic across batch orders
-        pdf = pdf.assign(__ts_us=ts_us)
-        pdf = pdf.sort_values(["__ts_us", "event_id"])
-        row = pdf.iloc[-1]
-        if (
-            best_ts is None
-            or (int(row["__ts_us"]), int(row["event_id"])) > (best_ts, best_eid or -1)
-        ):
-            best_eid = int(row["event_id"])
-            best_ts = int(row["__ts_us"])
-            best_type = str(row["event_type"])
-            best_val = float(row["value"])
+        i = int(np.lexsort((eid, ts_us))[-1])
+        if best_ts is None or (int(ts_us[i]), int(eid[i])) > (best_ts, best_eid or -1):
+            best_eid = int(eid[i])
+            best_ts = int(ts_us[i])
+            best_type = str(pdf["event_type"].iat[i])
+            best_val = float(pdf["value"].iat[i])
 
     state.update((best_eid, best_ts, best_type, best_val))
     yield pd.DataFrame(

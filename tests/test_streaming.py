@@ -1268,3 +1268,30 @@ def test_run_to_table_removes_its_checkpoint(spark, tmp_path, monkeypatch):
     out = jobs.run_to_table(spark.readStream.schema("k long").json(str(src)))
     assert sorted(r["k"] for r in out.collect()) == [1, 2]
     assert [p.name for p in ckpt_root.iterdir() if p.name.startswith("ckpt_")] == []
+
+
+def test_run_to_table_leaves_session_as_found(spark, tmp_path):
+    """run_to_table clamps shuffle partitions only while the query runs
+    and drops its memory-sink view; the returned frame still reads and
+    aggregates the drained rows."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.jsonl").write_text("".join(f'{{"k": {i % 3}}}\n' for i in range(30)))
+    keep = spark.conf.get("spark.sql.shuffle.partitions")
+    wide = str(4 * spark.sparkContext.defaultParallelism + 52)
+
+    def sink_views():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("stream_sink_")}
+
+    before = sink_views()
+    spark.conf.set("spark.sql.shuffle.partitions", wide)
+    try:
+        counts = spark.readStream.schema("k long").json(str(src)).groupBy("k").count()
+        out = jobs.run_to_table(counts, output_mode="complete")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == wide
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", keep)
+    assert sink_views() <= before
+    assert out.count() == 3
+    assert sorted(tuple(r) for r in out.collect()) == [(0, 10), (1, 10), (2, 10)]
+    assert out.agg(F.sum("count")).collect()[0][0] == 30

@@ -11,6 +11,7 @@ import inspect
 
 SECTIONS = [
     ("Session factory", "etl_everywhere_hub_spark.session"),
+    ("Local Python worker daemon", "etl_everywhere_hub_spark.pyworker_daemon"),
     ("Fixture catalog", "etl_everywhere_hub_spark.catalog"),
     ("Text functions", "etl_everywhere_hub_spark.functions.text"),
     ("Vector functions", "etl_everywhere_hub_spark.functions.vectors"),
