@@ -19,7 +19,6 @@ import shutil
 import tempfile
 from typing import Iterable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -310,15 +309,6 @@ def streaming_dedup(events: DataFrame) -> DataFrame:
 
 # --- stateful device cache (reference R10-R12, verbatim semantics) ---
 
-DEVICE_STATE_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-    ]
-)
-
 DEVICE_OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -330,52 +320,30 @@ DEVICE_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _device_cache_fn(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    """Keep the newest event per key across micro-batches (last-write-wins
-    upsert, task.ts:148) and emit the current best after each batch."""
-    (user_id,) = key
-    if state.exists:
-        best_eid, best_ts, best_type, best_val = state.get
-    else:
-        best_eid = best_ts = best_type = best_val = None
-
-    for pdf in pdfs:
-        if pdf.empty:
-            continue
-        # explicit µs unit — Arrow may hand us datetime64[ns] or [us]
-        ts_us = pdf["ts"].astype("datetime64[us]").to_numpy("int64")
-        eid = pdf["event_id"].to_numpy()
-        # newest by (ts, event_id) — deterministic across batch orders
-        i = int(np.lexsort((eid, ts_us))[-1])
-        if best_ts is None or (int(ts_us[i]), int(eid[i])) > (best_ts, best_eid or -1):
-            best_eid = int(eid[i])
-            best_ts = int(ts_us[i])
-            best_type = str(pdf["event_type"].iat[i])
-            best_val = float(pdf["value"].iat[i])
-
-    state.update((best_eid, best_ts, best_type, best_val))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "event_id": [best_eid],
-            "ts": [pd.Timestamp(best_ts, unit="us")],
-            "event_type": [best_type],
-            "value": [best_val],
-        }
-    )
-
-
 def stateful_device_cache(events: DataFrame) -> DataFrame:
-    """applyInPandasWithState keyed cache: one state row per device,
-    update-mode emission of the current latest per key."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _device_cache_fn,
-        outputStructType=DEVICE_OUTPUT_SCHEMA,
-        stateStructType=DEVICE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    """Keyed last-write-wins cache (task.ts:145-149): one state row per
+    device, holding its newest event by (ts, event_id), emitted in
+    update mode after each micro-batch that touches the device.
+
+    Newest-by-a-total-order is a max, so the state is Spark's own
+    streaming aggregate (``max_by`` in the state store) and no Python
+    worker runs. A null ts orders below every non-null ts, as in the
+    batch ``latest_per_key``; rows tied on both ts and event_id have no
+    defined winner. Output columns follow DEVICE_OUTPUT_SCHEMA."""
+    latest = F.max_by(
+        F.struct("event_id", "ts", "event_type", "value"),
+        F.struct("ts", "event_id"),
+    )
+    return (
+        events.groupBy("user_id")
+        .agg(latest.alias("latest"))
+        .select(
+            "user_id",
+            "latest.event_id",
+            F.col("latest.ts").cast("timestamp_ntz").alias("ts"),
+            "latest.event_type",
+            "latest.value",
+        )
     )
 
 
@@ -425,8 +393,8 @@ def _track_cache_fn(retention_ms: int, use_timeout: bool):
                     best = (
                         int(row.msg_id),
                         t,
-                        str(row.callsign),
-                        str(row.cot_type),
+                        row.callsign,
+                        row.cot_type,
                         float(row.lon),
                         float(row.lat),
                     )
@@ -654,93 +622,6 @@ def stream_stream_click_purchase_left_outer(events: DataFrame) -> DataFrame:
     )
 
 
-# --- transformWithStateInPandas: Spark-4 StatefulProcessor device cache ---
-#
-# Same R10-R12 semantics as stateful_device_cache, on the successor
-# API (arbitrary named state + native per-state TTL + timers instead
-# of one state tuple + one timeout). At scale the practical wins over
-# applyInPandasWithState: state lives in the RocksDB provider with
-# changelog checkpointing (no full-snapshot upload per batch), TTL is
-# enforced by the store itself (ttlDurationMs — no timer bookkeeping
-# in Python), and the same processor can host additional state
-# (e.g. per-device alert ListState) without re-keying the pipeline.
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    ExpiredTimerInfo,
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
-
-
-class DeviceCacheProcessor(StatefulProcessor):
-    """Per-key latest-event cache (last-write-wins upsert,
-    /root/reference/task.ts:145-149) with store-native TTL standing in
-    for the RetentionDuration eviction sweep (task.ts:251-256)."""
-
-    def __init__(self, ttl_ms: int | None = None):
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._latest = handle.getValueState(
-            "latest", DEVICE_STATE_SCHEMA, ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterable[pd.DataFrame], timer_values: TimerValues
-    ) -> Iterable[pd.DataFrame]:
-        (user_id,) = key
-        best = self._latest.get() if self._latest.exists() else None
-        for pdf in rows:
-            if pdf.empty:
-                continue
-            ts_us = pdf["ts"].astype("datetime64[us]").astype("int64")
-            pdf = pdf.assign(__ts_us=ts_us).sort_values(["__ts_us", "event_id"])
-            row = pdf.iloc[-1]
-            cand = (
-                int(row["event_id"]),
-                int(row["__ts_us"]),
-                str(row["event_type"]),
-                float(row["value"]),
-            )
-            # newest by (ts, event_id) — same total order as the
-            # applyInPandasWithState twin, deterministic across batches
-            if best is None or (cand[1], cand[0]) > (best[1], best[0]):
-                best = cand
-        if best is not None:
-            self._latest.update(best)
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "event_id": [best[0]],
-                    "ts": [pd.Timestamp(best[1], unit="us")],
-                    "event_type": [best[2]],
-                    "value": [best[3]],
-                }
-            )
-
-    def handleExpiredTimer(
-        self, key: tuple, timer_values: TimerValues, expired_timer_info: ExpiredTimerInfo
-    ) -> Iterable[pd.DataFrame]:
-        self._latest.clear()
-        return iter([])
-
-    def close(self) -> None:
-        pass
-
-
-def twstate_device_cache(events: DataFrame, ttl_ms: int | None = None) -> DataFrame:
-    """transformWithStateInPandas keyed cache: one state row per
-    device, update-mode emission of the current latest per key. Equal
-    output to stateful_device_cache on any deterministic replay."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        DeviceCacheProcessor(ttl_ms),
-        outputStructType=DEVICE_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="ProcessingTime",
-    )
-
-
 def _track_cache_event_fn(retention_ms: int):
     """Event-time-TTL state function: last-write-wins upsert, timeout
     timestamp pinned to last_time + retention so the WATERMARK (data
@@ -781,8 +662,8 @@ def _track_cache_event_fn(retention_ms: int):
                     best = (
                         int(row.msg_id),
                         t,
-                        str(row.callsign),
-                        str(row.cot_type),
+                        row.callsign,
+                        row.cot_type,
                         float(row.lon),
                         float(row.lat),
                     )

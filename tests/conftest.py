@@ -88,10 +88,8 @@ def pytest_collection_modifyitems(config, items):
 
 def pytest_terminal_summary(terminalreporter, exitstatus, config):
     """Env-blocked skips must be LOUD (VERDICT r7 item #8): a plain
-    's' in the progress bar hides that a whole verification path
-    (e.g. transformWithStateInPandas, protobuf-blocked) did not run.
-    Print each skip with its reason and, where one exists, the
-    executable recipe for running it elsewhere."""
+    's' in the progress bar hides that a whole verification path did
+    not run. Print each skip with its reason."""
     skipped = terminalreporter.stats.get("skipped", [])
     if not skipped:
         return
@@ -100,8 +98,3 @@ def pytest_terminal_summary(terminalreporter, exitstatus, config):
         reason = rep.longrepr[2] if isinstance(rep.longrepr, tuple) else rep.longrepr
         terminalreporter.write_line(f"SKIPPED {rep.nodeid}")
         terminalreporter.write_line(f"    {reason}")
-    if any("protobuf" in str(rep.longrepr) for rep in skipped):
-        terminalreporter.write_line(
-            "    recipe: PYTHONPATH=<repo> python tools/verify_twstate.py "
-            "--sf <fixtures>  (exit 0 = equivalence proven)"
-        )

@@ -253,12 +253,12 @@ def test_inner_macro_scan_uses_word_boundary(con):
     inside an argument (e.g. ``myelem(...)``) must NOT be treated as an
     inner macro call — the old bare-substring check skipped expanding
     the ENCLOSING macro forever, leaving raw macro text in the oracle."""
-    from etl_everywhere_hub_spark.queries import _contains_macro_call
+    from etl_everywhere_hub_spark.queries import _MACRO_CALL
 
-    assert not _contains_macro_call("myelem(x)")
-    assert not _contains_macro_call("foo_ntok(x)")
-    assert _contains_macro_call("elem(a, 1)")
-    assert _contains_macro_call("1 + ntok(s)")
+    assert not _MACRO_CALL.search("myelem(x)")
+    assert not _MACRO_CALL.search("foo_ntok(x)")
+    assert _MACRO_CALL.search("elem(a, 1)")
+    assert _MACRO_CALL.search("1 + ntok(s)")
     # end-to-end: enclosing macro expands even when its arg contains a
     # non-macro identifier that ends in a macro name
     src = "alen(filter([1, 2], x -> x > myelem(0)))"
@@ -305,3 +305,56 @@ def test_alen_call_sites_are_comma_safe():
                 f"{name}: alen() over unreviewed argument {arg!r} — "
                 "prove its elements are comma-free and allowlist it"
             )
+
+
+# ---------------------------------------------------------------------------
+# one-pass expander: hand-written expansions
+# ---------------------------------------------------------------------------
+
+_E = "((a)[(1) - 1 + CAST(1^1 AS BIGINT)])"  # elem(a, 1)
+
+ONE_PASS_CASES = [
+    # multi-argument call
+    ("elem(a, 1)", _E),
+    # nested call: the inner one expands inside the outer's argument
+    (
+        "elem(elem(a, 1), 2)",
+        f"(({_E})[(2) - 1 + CAST(1^1 AS BIGINT)])",
+    ),
+    # an expansion that itself emits calls is expanded again
+    (
+        "sumn(a, 2)",
+        f"(CAST({_E} AS DOUBLE) + "
+        "CAST(((a)[(2) - 1 + CAST(1^1 AS BIGINT)]) AS DOUBLE))",
+    ),
+    # an identifier merely ending in a macro name is left alone, its
+    # argument still expands
+    ("myelem(elem(a, 1))", f"myelem({_E})"),
+    # calls side by side, text between them kept
+    ("elem(a, 1) + ntok(s)", f"{_E} + (length(s) - length(replace(s, ' ', '')) + 1)"),
+    # `//` rewrites first; the macro calls in its operands expand after
+    (
+        "ntok(s) // 2",
+        "CAST((((length(s) - length(replace(s, ' ', '')) + 1)) - "
+        "((length(s) - length(replace(s, ' ', '')) + 1)) % (2)) / (2) AS BIGINT)",
+    ),
+    ("SELECT 1", "SELECT 1"),
+]
+
+
+@pytest.mark.parametrize("src,want", ONE_PASS_CASES)
+def test_one_pass_expansion(src, want):
+    assert _expand_macros(src) == want
+
+
+def test_one_pass_expansion_evaluates_natively(con):
+    """The nested, multi-argument and `//` cases above agree with
+    DuckDB's native spelling of the same expression."""
+    cases = [
+        ("elem(elem([[1, 2], [3, 4]], 2), 1)", "[[1, 2], [3, 4]][2][1]"),
+        ("sumn([1.5, 2.5, 9.0], 2)", "1.5 + 2.5"),
+        ("ntok('a b c d e') // 2", "5 // 2"),
+        ("elem([10, 20, 30], ntok('x y') * 3 // 2)", "[10, 20, 30][3]"),
+    ]
+    for src, native in cases:
+        assert duck1(con, _expand_macros(src)) == duck1(con, native), src

@@ -82,10 +82,11 @@ def test_tracks_stateful_pipeline_end_to_end(spark, tmp_path):
 
     now_ms = 1_700_000_000_000
 
-    def delivery(msg_id, entity, t, emergency=False, alias=None):
+    def delivery(msg_id, entity, t, emergency=False, alias=None, name=None):
         return {"msg_id": msg_id, "converterId": "c", "deviceId": entity * 10,
                 "teamId": 1, "entityId": entity, "deviceType": "t",
-                "name": f"N{entity}", "alias": alias, "source": "s",
+                "name": f"N{entity}" if name is None else name, "alias": alias,
+                "source": "s",
                 "trackPoint": {"time": t, "direction": 0, "inboundMessageId": 1,
                 "isEmergency": emergency, "source": None,
                 "point": {"x": 1.0 * entity, "y": 2.0 * entity}, "alertsList": None}}
@@ -96,6 +97,7 @@ def test_tracks_stateful_pipeline_end_to_end(spark, tmp_path):
         delivery(3, 2, now_ms - 10_000, True),    # emergency
         delivery(4, 3, now_ms - 7_200_000),       # stale → evicted at read-out
         delivery(5, 4, None),                     # null time → evicted
+        delivery(6, 5, now_ms - 5_000, name=""),  # alias null, name "" → null callsign
     ]
     (tmp_path / "b1.jsonl").write_text("\n".join(_json.dumps(r) for r in rows))
 
@@ -115,9 +117,112 @@ def test_tracks_stateful_pipeline_end_to_end(spark, tmp_path):
         for r in expected_df.collect()
     }
     assert got == expected
-    assert set(got) == {"inreach-1", "inreach-2"}
+    assert set(got) == {"inreach-1", "inreach-2", "inreach-5"}
     assert got["inreach-1"][0] == 2  # last write won
     assert got["inreach-2"][1] == "b-a-o-tbl"  # emergency CoT
+    assert got["inreach-5"][2] is None  # a null stays null, not 'None'
+
+
+_DEVICE_EVENTS_SCHEMA = "event_id long, user_id long, event_type string, value double, ts timestamp"
+
+
+def _device_cache_batches(tmp_path):
+    """Three event files for the keyed device cache, replayed one file
+    per micro-batch; rows as (event_id, user_id, event_type, value,
+    ts seconds past T0 or None). Every event_id is unique."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2023, 11, 14, 22, 0, tzinfo=dt.timezone.utc)
+    batches = [
+        [(1, 1, "view", 1.0, 10), (2, 2, "click", 2.0, None), (4, 3, "view", 4.0, None),
+         (6, 4, "view", 6.0, 1)],
+        # user 1: same ts as event 1, higher event_id wins the tie;
+        # user 2: a timed event beats the null-ts one
+        [(5, 1, "error", 5.0, 10), (3, 2, "purchase", 3.0, 0)],
+        # older events arriving late lose; user 3 stays all-null (the
+        # higher event_id wins); user 4 moves forward
+        [(9, 1, "view", 9.0, 5), (10, 2, "view", 10.0, None), (11, 3, "error", 11.0, None),
+         (7, 4, "error", 7.0, 2)],
+    ]
+    src = tmp_path / "events"
+    src.mkdir()
+    for k, rows in enumerate(batches):
+        cols = list(zip(*rows))
+        table = pa.table(
+            {
+                "event_id": pa.array(cols[0], pa.int64()),
+                "user_id": pa.array(cols[1], pa.int64()),
+                "event_type": pa.array(cols[2], pa.string()),
+                "value": pa.array(cols[3], pa.float64()),
+                "ts": pa.array(
+                    [None if t is None else t0 + dt.timedelta(seconds=t) for t in cols[4]],
+                    pa.timestamp("us", tz="UTC"),
+                ),
+            }
+        )
+        path = src / f"part-{k}.parquet"
+        pq.write_table(table, path)
+        os.utime(path, (1_700_000_000 + k, 1_700_000_000 + k))  # file-source order
+    return str(src)
+
+
+def test_stateful_device_cache_merges_state_across_batches(spark, tmp_path):
+    """The device cache's state carries over micro-batches: after a
+    one-file-per-trigger replay, the drained latest per device equals
+    the batch latest_per_key over every event (ts ties broken by
+    event_id, null ts below any timestamp, late older events lose)."""
+    src = _device_cache_batches(tmp_path)
+    stream = (
+        spark.readStream.schema(_DEVICE_EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    emitted = jobs.run_to_table(jobs.stateful_device_cache(stream), output_mode="update")
+    assert emitted.schema == jobs.DEVICE_OUTPUT_SCHEMA
+    # update mode: one emission per device per batch that touched it
+    touched = {r["user_id"]: r["count"] for r in emitted.groupBy("user_id").count().collect()}
+    assert touched == {1: 3, 2: 3, 3: 2, 4: 2}
+
+    cols = ["user_id", "event_id", "ts", "event_type", "value"]
+    got = {tuple(r) for r in latest_per_key(emitted, ["user_id"], "ts", "event_id")
+           .select(cols).collect()}
+    events = (
+        spark.read.schema(_DEVICE_EVENTS_SCHEMA).parquet(src)
+        .withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    )
+    want = {tuple(r) for r in latest_per_key(events, ["user_id"], "ts", "event_id")
+            .select(cols).collect()}
+    assert got == want
+    assert {r[0]: r[1] for r in got} == {1: 5, 2: 3, 3: 11, 4: 7}
+
+
+def test_stateful_device_cache_state_stays_in_the_jvm(spark, tmp_path, capsys):
+    """The cache is Spark's streaming aggregate: its executed plan saves
+    to the state store and has no Python keyed-state operator."""
+    src = _device_cache_batches(tmp_path)
+    stream = spark.readStream.schema(_DEVICE_EVENTS_SCHEMA).parquet(src)
+    q = (
+        jobs.stateful_device_cache(stream)
+        .writeStream.format("memory")
+        .queryName("device_cache_plan")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        q.explain()
+    finally:
+        q.stop()
+        spark.catalog.dropTempView("device_cache_plan")
+    plan = capsys.readouterr().out
+    assert "StateStoreSave" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
 
 
 def test_rate_source_smoke(spark):
@@ -228,61 +333,6 @@ def test_stream_stream_join_equals_batch(spark, sf_dir):
             & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")))
     want = {(r["purchase_id"], r["click_id"]) for r in p.join(c, cond).collect()}
     assert got == want and len(want) > 0
-
-
-def test_transform_with_state_equals_legacy_state_api(spark, sf_dir):
-    """The Spark-4 StatefulProcessor cache (transformWithStateInPandas)
-    must produce the same final latest-per-key as both the legacy
-    applyInPandasWithState cache and the batch window formulation.
-
-    transformWithState's state-server protocol needs protobuf, which
-    this container lacks — skip (not xfail: the processor is exercised
-    on any cluster with protobuf present)."""
-    import importlib.util
-    import pytest as _pytest
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        _pytest.skip(
-            "transformWithStateInPandas needs the google.protobuf runtime "
-            "(pyspark.sql.streaming.proto.StateMessage_pb2 raises "
-            "ModuleNotFoundError: No module named 'google'). Vendoring was "
-            "re-attempted 2026-08-14: `pip download protobuf` fails with DNS "
-            "resolution errors (no network in the container) and no wheel "
-            "exists on disk; a hand-written google.protobuf runtime shim "
-            "would have to reimplement descriptor_pool/message serialization "
-            "against Spark's JVM wire format — out of scope. The processor "
-            "runs unmodified on any cluster with protobuf installed."
-        )
-    s = jobs.stream_events(spark, sf_dir)
-    tw = jobs.run_to_table(jobs.twstate_device_cache(s), output_mode="update")
-    tw_latest = {
-        r["user_id"]: (r["event_id"], r["ts"])
-        for r in latest_per_key(tw, ["user_id"], "ts", "event_id").collect()
-    }
-
-    e = jobs.stream_events(spark, sf_dir)
-    legacy = jobs.run_to_table(jobs.stateful_device_cache(e), output_mode="update")
-    legacy_latest = {
-        r["user_id"]: (r["event_id"], r["ts"])
-        for r in latest_per_key(legacy, ["user_id"], "ts", "event_id").collect()
-    }
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(ev.dtypes).get("ts") == "bigint":
-        ev = ev.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    batch_latest = {
-        r["user_id"]: (r["event_id"], r["ts"])
-        for r in latest_per_key(
-            ev.select("user_id", "event_id", "ts", "event_type", "value"),
-            ["user_id"], "ts", "event_id",
-        ).collect()
-    }
-    assert tw_latest == legacy_latest == batch_latest
-    assert len(tw_latest) > 0
 
 
 def test_event_time_ttl_cache_evicts_by_watermark(spark, tmp_path):

@@ -1,11 +1,11 @@
-"""One-command cluster smoke for the three environment-blocked
-verifications (VERDICT r8 item #7): real Kafka broker, Delta table
-format, transformWithStateInPandas. In THIS container all three are
-blocked (no broker, no Delta jars, no protobuf); on any
-fully-provisioned cluster this script runs the SAME assertions the
-in-container twins pin, and prints one PASS / FAIL / SKIP(env) line
-per check — turning the COVERAGE.md ledger from "not implemented
-here" into "not verifiable here, one command elsewhere".
+"""One-command cluster smoke for the environment-blocked
+verifications (VERDICT r8 item #7): real Kafka broker and Delta table
+format. Without a broker or the Delta jars each check prints
+SKIP(env); on any fully-provisioned cluster this script runs the
+SAME assertions the in-container twins pin, and prints one PASS /
+FAIL / SKIP(env) line per check — turning the COVERAGE.md ledger
+from "not implemented here" into "not verifiable here, one command
+elsewhere".
 
 Usage (see RUNBOOK.md for the full walkthrough)::
 
@@ -29,11 +29,7 @@ Checks:
    asserts the final table equals merge_cdc_sink's parquet snapshot,
    including the retained delete tombstones being invisible in the
    read view.
-3. ``twstate`` — needs google.protobuf. Delegates to
-   tools/verify_twstate.py (three-way latest-per-key equivalence:
-   transformWithStateInPandas == applyInPandasWithState == batch
-   window).
-4. ``codec-interop`` (``--codec-interop``, round 10 / VERDICT r9
+3. ``codec-interop`` (``--codec-interop``, round 10 / VERDICT r9
    item #3) — closes the documented memory-risk on the
    hand-transcribed codec constant tables (T.81 Table D.3 in
    jpeg_arith.py, the VP8L distance map in webp.py, the RFC 6386
@@ -90,7 +86,6 @@ gate can require specific ones.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import sys
 
@@ -1056,28 +1051,7 @@ def main(argv: list[str]) -> int:
             "merge_cdc_sink crash matrix, tests green)"
         )
 
-    # 3. transformWithStateInPandas
-    if importlib.util.find_spec("google") and importlib.util.find_spec(
-        "google.protobuf"
-    ):
-        import subprocess
-
-        rc = subprocess.call(
-            [sys.executable, os.path.join(os.path.dirname(__file__), "verify_twstate.py"),
-             "--sf", sf]
-        )
-        results.append(
-            "PASS twstate (three-way equivalence)" if rc == 0
-            else f"FAIL twstate: verify_twstate.py exit {rc}"
-        )
-    else:
-        results.append(
-            "SKIP(env) twstate: google.protobuf absent (in-container "
-            "twin: applyInPandasWithState cache verified; recipe: "
-            "tools/verify_twstate.py)"
-        )
-
-    # 4. codec interop (external encoders vs the transcribed tables)
+    # 3. codec interop (external encoders vs the transcribed tables)
     if want_interop:
         try:
             results.extend(smoke_codec_interop())
