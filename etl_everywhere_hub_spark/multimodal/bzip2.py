@@ -1,4 +1,5 @@
-"""bzip2 decoder, dependency-free in the decode path — round 12.
+"""bzip2 multistream walk: stream and block layout from the format,
+payload decode by libbzip2 (stdlib ``bz2``).
 
 Why this belongs in the engine: the Wikipedia dumps — one of the
 most-used public LLM pretraining corpora — ship as MULTISTREAM
@@ -7,55 +8,31 @@ holding ~100 articles, designed so a distributed reader can fan out
 on the byte-aligned stream boundaries (the companion index file is
 literally ``offset:page_id:title`` lines). An ingestion layer that
 reads WARC.gz (q352/q353) and .jsonl.zst (q357/q362) but not .bz2
-cannot touch a Wikipedia dump. Reference analog: none (task.ts has
-no codecs) — north-star ingestion surface, same family as
-multimodal/deflate.py and multimodal/zstd.py.
+cannot touch a Wikipedia dump.
 
-Implemented from the public format (the format has no RFC; the
-authoritative public descriptions are the bzip2 source distribution
-and the independently-published format specifications derived from
-it — all structure below is cited by stage name as the format
-documents use them):
+- Stream header ``BZh`` + level digit '1'..'9' (block size = level x
+  100000 bytes), checked from the format.
+- Payload decode: one ``bz2.BZ2Decompressor`` per stream (libbzip2
+  verifies every block CRC and the combined stream CRC); the stream's
+  ``end`` is where its ``unused_data`` starts — the next stream's
+  ``BZh`` offset.
+- Block walk, header-only: everything inside a stream is one
+  MSB-first bitstream, so blocks start at arbitrary bit offsets. The
+  48-bit block magic 0x314159265359 is found with ``bytes.find`` at
+  all 8 bit shifts; each block magic is followed by that block's
+  CRC32 and the deprecated ``randomized`` bit (1 is refused). The
+  stream footer (magic 0x177245385090 + combined CRC, zero-padded to
+  the byte boundary) ends the stream. The combined CRC recomputed
+  from the found blocks' CRCs (rotate-left-1, XOR) must equal the
+  footer's, so a false magic match inside Huffman data fails loudly
+  instead of miscounting ``n_blocks``.
 
-- Stream header ``BZh`` + level digit '1'..'9' (block size =
-  level x 100000 bytes); streams are byte-aligned, everything inside
-  a stream is one continuous MSB-first bitstream.
-- Block magic 0x314159265359 (48 bits), per-block CRC32 (MSB-first,
-  poly 0x04C11DB7, init/final 0xFFFFFFFF — NOT the zlib CRC), the
-  deprecated ``randomized`` bit (must be 0; 1 raises), 24-bit
-  ``origPtr`` into the BWT matrix.
-- Symbol map: 16-bit present-range bitmap, then 16 bits per present
-  range → the used-byte list; alphabet size = nUsed + 2 (RUNA, RUNB,
-  MTF values 1..nUsed-1, EOB).
-- Selectors: 3-bit nGroups (2..6), 15-bit nSelectors, each selector
-  a unary-coded index into an MTF list of group numbers; the active
-  Huffman table switches every 50 decoded symbols.
-- Per-group code lengths: 5-bit start, then {1 keep | 10 increment |
-  11 decrement} deltas, lengths clamped to 1..20 by validation;
-  canonical code assignment in (length, symbol-index) order.
-- MTF + RLE2 decode: RUNA/RUNB accumulate a bijective-base-2 run of
-  the MTF-front byte; EOB terminates the block; the result is the
-  BWT last column of length <= blockSize.
-- Inverse BWT via the standard successor vector (cumulative counts,
-  ``tt[cum[b]++] = i``, walk from ``tt[origPtr]``).
-- RLE1 decode: 4 equal bytes are followed by an extra-count byte
-  (0..255 accepted on decode); the block CRC is over this final
-  plaintext.
-- Stream footer 0x177245385090 (48 bits) + 32-bit combined CRC
-  (rotate-left-1 then XOR per block), bit padding to the byte
-  boundary — the next stream's ``BZh`` starts on the next byte,
-  which is exactly the multistream split-point contract.
-
-There is deliberately NO from-scratch compressor here: unlike zstd
-(no library in this container), CPython ships ``bz2`` — a FOREIGN
-encoder (libbzip2) — so every fixture this decoder is tested and
-oracle-checked against is real libbzip2 output, a strictly stronger
-pin than round-tripping our own encoder. Hand-built streams cover
-the corners libbzip2 never emits (randomized bit, bad magics, CRC
-tampering) in tests/test_bzip2.py.
+Fixtures come from stdlib ``bz2`` (libbzip2) as a FOREIGN encoder;
+tests/test_bzip2.py hand-tampers streams for the corners libbzip2
+never emits (randomized bit, bad magics, CRC tampering).
 
 Scale posture: per-stream decode is sequential by construction (one
-bitstream), the WHOLE POINT of the multistream layout is that a
+bitstream); the WHOLE POINT of the multistream layout is that a
 100 TB dump is millions of independent streams — ``bzip2_streams``
 returns the per-stream byte offsets a distributed reader fans out
 on, the same contract as ``zstd_frames`` / the WARC member walk.
@@ -64,8 +41,13 @@ Inside the engine the decode runs worker-side per Arrow batch
 """
 from __future__ import annotations
 
+import bz2
+
+from etl_everywhere_hub_spark.multimodal.deflate import decode_until_eof
+
 _BLOCK_MAGIC = 0x314159265359
 _FOOTER_MAGIC = 0x177245385090
+_M32 = 0xFFFFFFFF
 
 
 def _crc_table() -> list:
@@ -74,7 +56,7 @@ def _crc_table() -> list:
         c = b << 24
         for _ in range(8):
             c = ((c << 1) ^ 0x04C11DB7) if (c & 0x80000000) else (c << 1)
-        tab.append(c & 0xFFFFFFFF)
+        tab.append(c & _M32)
     return tab
 
 
@@ -85,216 +67,44 @@ def bzip2_crc32(data: bytes, crc: int = 0xFFFFFFFF) -> int:
     """bzip2's CRC32: MSB-first feed of poly 0x04C11DB7 — the
     bit-reversed cousin of the zlib CRC; the two never agree."""
     for byte in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _CRC_TAB[((crc >> 24) ^ byte) & 0xFF]
+        crc = ((crc << 8) & _M32) ^ _CRC_TAB[((crc >> 24) ^ byte) & 0xFF]
     return crc
 
 
-class _MsbReader:
-    """MSB-first bit reader over bytes (bzip2 packs everything,
-    including multi-byte magics, as a big-endian bitstream)."""
-
-    def __init__(self, data: bytes, bitpos: int = 0):
-        self.data = data
-        self.bitpos = bitpos
-
-    def bits(self, n: int) -> int:
-        out = 0
-        data, p = self.data, self.bitpos
-        if p + n > len(data) * 8:
-            raise ValueError("bzip2: bitstream truncated")
-        for _ in range(n):
-            out = (out << 1) | ((data[p >> 3] >> (7 - (p & 7))) & 1)
-            p += 1
-        self.bitpos = p
-        return out
-
-    def bit(self) -> int:
-        p = self.bitpos
-        if p >= len(self.data) * 8:
-            raise ValueError("bzip2: bitstream truncated")
-        self.bitpos = p + 1
-        return (self.data[p >> 3] >> (7 - (p & 7))) & 1
+def _bits(data: bytes, bit: int, n: int) -> int:
+    """``n`` bits of the MSB-first bitstream from absolute bit ``bit``."""
+    k = bit >> 3
+    nbytes = ((bit & 7) + n + 7) >> 3
+    v = int.from_bytes(data[k : k + nbytes], "big")
+    return (v >> (nbytes * 8 - (bit & 7) - n)) & ((1 << n) - 1)
 
 
-class _HuffTable:
-    """Canonical decoder in the format's own limit/base form: codes
-    assigned in (length, symbol-index) order; decode reads one bit at
-    a time, comparing the running code against the per-length limit —
-    O(length) per symbol, no table blowup at 20-bit codes."""
-
-    def __init__(self, lengths: list):
-        self.min_len = min(lengths)
-        self.max_len = max(lengths)
-        if not (1 <= self.min_len and self.max_len <= 20):
-            raise ValueError("bzip2: code length out of 1..20")
-        # perm[length] = symbols of that length in index order
-        limit = {}
-        base = {}
-        perm: list = []
-        code = 0
-        for ln in range(self.min_len, self.max_len + 1):
-            syms = [s for s, sl in enumerate(lengths) if sl == ln]
-            base[ln] = code - len(perm)  # code - rank offset
-            perm.extend(syms)
-            code += len(syms)
-            limit[ln] = code - 1
-            code <<= 1
-        self.limit, self.base, self.perm = limit, base, perm
-
-    def read(self, r: _MsbReader) -> int:
-        code = r.bits(self.min_len)
-        for ln in range(self.min_len, self.max_len + 1):
-            if code <= self.limit[ln]:
-                return self.perm[code - self.base[ln]]
-            code = (code << 1) | r.bit()
-        raise ValueError("bzip2: invalid Huffman code")
+def _block_bits(data: bytes, lo: int, hi: int) -> list:
+    """Sorted bit offsets of every block magic in ``data`` that starts
+    in [lo, hi) bits. For a magic at bit shift ``s`` in its first byte,
+    the next five bytes are fixed, so one ``bytes.find`` per shift
+    finds the candidates and a 48-bit compare confirms each."""
+    found = []
+    for s in range(8):
+        pattern = (_BLOCK_MAGIC << (8 - s)).to_bytes(7, "big")[1:6]
+        m = data.find(pattern, max(0, (lo >> 3) - 1) + 1, (hi >> 3) + 6)
+        while m >= 0:
+            bit = (m - 1) * 8 + s
+            if lo <= bit < hi and _bits(data, bit, 48) == _BLOCK_MAGIC:
+                found.append(bit)
+            m = data.find(pattern, m + 1, (hi >> 3) + 6)
+    return sorted(found)
 
 
-def _read_symbol_map(r: _MsbReader) -> list:
-    ranges = r.bits(16)
-    used = []
-    for i in range(16):
-        if ranges & (0x8000 >> i):
-            row = r.bits(16)
-            for j in range(16):
-                if row & (0x8000 >> j):
-                    used.append(i * 16 + j)
-    if not used:
-        raise ValueError("bzip2: empty symbol map")
-    return used
-
-
-def _read_selectors(r: _MsbReader, n_groups: int) -> list:
-    n_sel = r.bits(15)
-    if n_sel == 0:
-        raise ValueError("bzip2: zero selectors")
-    mtf = list(range(n_groups))
-    out = []
-    for _ in range(n_sel):
-        j = 0
-        while r.bit():
-            j += 1
-            if j >= n_groups:
-                raise ValueError("bzip2: selector index out of range")
-        g = mtf.pop(j)
-        mtf.insert(0, g)
-        out.append(g)
-    return out
-
-
-def _read_code_lengths(r: _MsbReader, alpha: int) -> list:
-    ln = r.bits(5)
-    out = []
-    for _ in range(alpha):
-        while r.bit():
-            ln += -1 if r.bit() else 1
-            if not (1 <= ln <= 20):
-                raise ValueError("bzip2: delta walked length out of 1..20")
-        out.append(ln)
-    return out
-
-
-def _decode_block(r: _MsbReader, block_max: int) -> bytes:
-    """One block, reader positioned just after the 48-bit magic.
-    Returns the block plaintext (post inverse-BWT, post RLE1) after
-    verifying its CRC."""
-    want_crc = r.bits(32)
-    if r.bit():
-        raise ValueError(
-            "bzip2: randomized block (deprecated in the format, never "
-            "emitted by any maintained encoder) — refusing"
-        )
-    orig_ptr = r.bits(24)
-    used = _read_symbol_map(r)
-    alpha = len(used) + 2
-    n_groups = r.bits(3)
-    if not (2 <= n_groups <= 6):
-        raise ValueError("bzip2: nGroups out of 2..6")
-    selectors = _read_selectors(r, n_groups)
-    tables = [_HuffTable(_read_code_lengths(r, alpha)) for _ in range(n_groups)]
-
-    # MTF + RLE2 → BWT last column
-    eob = alpha - 1
-    mtf = list(used)
-    bwt = bytearray()
-    group_pos = 0
-    group_count = 0
-    table = None
-    run = 0
-    run_shift = 0
-    while True:
-        if group_count == 0:
-            if group_pos >= len(selectors):
-                raise ValueError("bzip2: selectors exhausted mid-block")
-            table = tables[selectors[group_pos]]
-            group_pos += 1
-            group_count = 50
-        group_count -= 1
-        sym = table.read(r)
-        if sym <= 1:  # RUNA / RUNB — bijective base 2
-            run += (sym + 1) << run_shift
-            run_shift += 1
-            continue
-        if run:
-            if len(bwt) + run > block_max:
-                raise ValueError("bzip2: block overruns its declared size")
-            bwt += bytes([mtf[0]]) * run
-            run = run_shift = 0
-        if sym == eob:
-            break
-        b = mtf.pop(sym - 1)
-        mtf.insert(0, b)
-        if len(bwt) >= block_max:
-            raise ValueError("bzip2: block overruns its declared size")
-        bwt.append(b)
-    if not bwt:
-        raise ValueError("bzip2: empty block body")
-    if orig_ptr >= len(bwt):
-        raise ValueError("bzip2: origPtr beyond block")
-
-    # inverse BWT: successor vector from cumulative counts
-    counts = [0] * 256
-    for b in bwt:
-        counts[b] += 1
-    cum = [0] * 256
-    t = 0
-    for i in range(256):
-        cum[i] = t
-        t += counts[i]
-    tt = [0] * len(bwt)
-    for i, b in enumerate(bwt):
-        tt[cum[b]] = i
-        cum[b] += 1
-    pre = bytearray(len(bwt))
-    p = tt[orig_ptr]
-    for i in range(len(bwt)):
-        pre[i] = bwt[p]
-        p = tt[p]
-
-    # RLE1: a run of 4 equal bytes carries an extra-count byte
-    out = bytearray()
-    i = 0
-    n = len(pre)
-    while i < n:
-        b = pre[i]
-        j = i + 1
-        while j < n and j - i < 4 and pre[j] == b:
-            j += 1
-        if j - i == 4:
-            if j >= n:
-                raise ValueError("bzip2: RLE1 run missing its count byte")
-            out += bytes([b]) * (4 + pre[j])
-            i = j + 1
-        else:
-            out += pre[i:j]
-            i = j
-    got = bzip2_crc32(bytes(out)) ^ 0xFFFFFFFF
-    if got != want_crc:
-        raise ValueError(
-            f"bzip2: block CRC mismatch (got {got:#010x}, "
-            f"stream says {want_crc:#010x})"
-        )
-    return bytes(out)
+def _footer_bit(data: bytes, pos: int, end: int) -> int:
+    """Bit offset of the footer magic of the stream [pos, end): the
+    footer's 80 bits end 0..7 zero pad bits before ``end``."""
+    for pad in range(8):
+        bit = end * 8 - pad - 80
+        if (bit >= (pos + 4) * 8 and _bits(data, bit, 48) == _FOOTER_MAGIC
+                and _bits(data, end * 8 - pad, pad) == 0):
+            return bit
+    raise ValueError(f"bzip2: no stream footer before byte {end}")
 
 
 def decode_stream(data: bytes, pos: int = 0) -> dict:
@@ -304,40 +114,51 @@ def decode_stream(data: bytes, pos: int = 0) -> dict:
     a multistream file (the Wikipedia-dump split-point contract)."""
     if data[pos : pos + 3] != b"BZh":
         raise ValueError(f"bzip2: bad stream header at byte {pos}")
+    if pos + 4 > len(data):
+        raise ValueError(f"bzip2: stream at byte {pos} truncated")
     level = data[pos + 3] - 0x30
     if not (1 <= level <= 9):
         raise ValueError(f"bzip2: bad level digit {data[pos + 3]:#04x}")
-    block_max = level * 100000
-    r = _MsbReader(data, (pos + 4) * 8)
-    out = bytearray()
+    if pos + 10 > len(data):
+        raise ValueError(f"bzip2: stream at byte {pos} truncated")
+    # the first block (or the footer) is byte-aligned right after the
+    # header: refuse what libbzip2 would misread before decoding
+    magic = _bits(data, (pos + 4) * 8, 48)
+    if magic not in (_BLOCK_MAGIC, _FOOTER_MAGIC):
+        raise ValueError(f"bzip2: bad block magic {magic:#014x}")
+    if magic == _BLOCK_MAGIC:
+        _check_not_randomized(data, (pos + 4) * 8)
+    out, end = decode_until_eof(bz2.BZ2Decompressor(), data, pos, "bzip2")
+    footer = _footer_bit(data, pos, end)
+    blocks = _block_bits(data, (pos + 4) * 8, footer)
     combined = 0
-    n_blocks = 0
-    while True:
-        magic = r.bits(48)
-        if magic == _FOOTER_MAGIC:
-            break
-        if magic != _BLOCK_MAGIC:
-            raise ValueError(f"bzip2: bad block magic {magic:#014x}")
-        block = _decode_block(r, block_max)
-        crc = bzip2_crc32(block) ^ 0xFFFFFFFF
-        combined = (((combined << 1) | (combined >> 31)) ^ crc) & 0xFFFFFFFF
-        out += block
-        n_blocks += 1
-    want = r.bits(32)
-    if want != combined:
+    for bit in blocks:
+        _check_not_randomized(data, bit)
+        combined = ((combined << 1) | (combined >> 31)) & _M32
+        combined ^= _bits(data, bit + 48, 32)
+    want = _bits(data, footer + 48, 32)
+    if combined != want:
         raise ValueError(
-            f"bzip2: stream combined CRC mismatch (got {combined:#010x}, "
-            f"footer says {want:#010x})"
+            f"bzip2: block walk of stream at byte {pos} found "
+            f"{len(blocks)} blocks whose CRCs combine to {combined:#010x}, "
+            f"footer says {want:#010x}"
         )
-    end = (r.bitpos + 7) // 8  # pad bits to the byte boundary
     return {
-        "data": bytes(out),
+        "data": out,
         "offset": pos,
         "end": end,
         "level": level,
-        "n_blocks": n_blocks,
+        "n_blocks": len(blocks),
         "crc": combined,
     }
+
+
+def _check_not_randomized(data: bytes, block_bit: int) -> None:
+    if _bits(data, block_bit + 80, 1):
+        raise ValueError(
+            "bzip2: randomized block (deprecated in the format, never "
+            "emitted by any maintained encoder) — refusing"
+        )
 
 
 def bzip2_streams(data: bytes) -> list:

@@ -13,7 +13,9 @@ so the encoder is implemented from the RFCs too.
   (``decompressobj(-15)``, raw RFC 1951); ``inflate`` keeps the
   (bytes, end offset) contract the member walks fan out on.
   ``decode_until_eof`` is the shared stream-to-end driver that
-  multimodal/xz.py uses for liblzma too.
+  multimodal/xz.py and multimodal/bzip2.py use for liblzma and
+  libbzip2 too; ``arrow_decode`` is its twin for the zstd and LZ4
+  frames multimodal/zstd.py and multimodal/lz4.py walk.
 - RFC 1952 framing, from spec: member header (magic/CM/FLG/MTIME/
   XFL/OS), FEXTRA / FNAME / FCOMMENT / FHCRC optional fields, CRC32 +
   ISIZE trailer validation, and MULTI-MEMBER walks returning
@@ -119,11 +121,12 @@ _FEED = 1 << 16  # input bytes per decompress call
 
 
 def decode_until_eof(dec, data: bytes, pos: int, codec: str) -> tuple:
-    """Feed ``data[pos:]`` to a stdlib ``zlib``/``lzma`` decompressor
-    object until its stream ends. Returns (decoded bytes, byte position
-    just past the stream). The input goes in slices: ``unused_data``
-    is a copy of whatever followed the stream in the last slice, so a
-    walk over many concatenated members stays linear in the buffer."""
+    """Feed ``data[pos:]`` to a stdlib ``zlib``/``lzma``/``bz2``
+    decompressor object until its stream ends. Returns (decoded bytes,
+    byte position just past the stream). The input goes in slices:
+    ``unused_data`` is a copy of whatever followed the stream in the
+    last slice, so a walk over many concatenated members stays linear
+    in the buffer."""
     view = memoryview(data)
     parts = []
     p = pos
@@ -131,11 +134,24 @@ def decode_until_eof(dec, data: bytes, pos: int, codec: str) -> tuple:
         while not dec.eof and p < len(data):
             parts.append(dec.decompress(view[p : p + _FEED]))
             p += _FEED
-    except (zlib.error, lzma.LZMAError) as e:
+    except (zlib.error, lzma.LZMAError, OSError) as e:
         raise ValueError(f"{codec}: {e} (stream at byte {pos})") from None
     if not dec.eof:
         raise ValueError(f"{codec}: stream at byte {pos} truncated")
     return b"".join(parts), min(p, len(data)) - len(dec.unused_data)
+
+
+def arrow_decode(codec: str, data: bytes, start: int, end: int) -> bytes:
+    """Decode the complete zstd or LZ4 frame ``data[start:end]`` with
+    pyarrow's bundled library. ``codec`` is 'zstd' or 'lz4'; the
+    library also verifies the frame's own checksums."""
+    import pyarrow as pa
+
+    try:
+        return pa.CompressedInputStream(
+            pa.BufferReader(data[start:end]), codec).read()
+    except OSError as e:
+        raise ValueError(f"{codec}: {e} (frame at byte {start})") from None
 
 
 def inflate(data: bytes, pos: int = 0) -> tuple:

@@ -1,4 +1,5 @@
-"""LZ4 frame + block codec, dependency-free — round 12.
+"""LZ4 frames (frame walk from spec, payload decode by liblz4) and raw
+LZ4 blocks.
 
 Why this belongs in the engine: after gzip (WARC/Common Crawl,
 q352/q353), zstd (.jsonl.zst releases, q357/q362) and bzip2
@@ -6,41 +7,40 @@ q352/q353), zstd (.jsonl.zst releases, q357/q362) and bzip2
 compression a corpus-ingestion layer meets in the wild — long the
 default codec of Hadoop/Spark shuffle and event-log pipelines, and
 ``.jsonl.lz4`` shards appear in public corpus mirrors that optimize
-for decode speed over ratio. Same discipline as the siblings: the
-decoder is implemented from the public format documents (the LZ4
-Frame Format and LZ4 Block Format specifications, Yann Collet; the
-xxHash spec for both checksum layers), pinned against hand-built
-streams AND the ``lz4`` CLI as a FOREIGN encoder/decoder in
+for decode speed over ratio. Sources: the LZ4 Frame Format and LZ4
+Block Format specifications and the xxHash spec (Yann Collet); the
+``lz4`` CLI pins interop as a foreign encoder/decoder in
 tests/test_lz4.py.
 
-Implemented from spec:
-- Block format: token byte (hi nibble literal length, lo nibble
-  match length - 4), 255-saturated length extension bytes, little-
-  endian 2-byte match offsets 1..65535 (offset 0 is corruption),
-  overlapping-match copy semantics (offset < length replicates),
-  final literals-only sequence.
-- Frame format: magic 0x184D2204, FLG (version 01, block
-  independence, block checksums, content size, content checksum,
-  DictID), BD max-block-size codes 4..7, the header-checksum byte
-  (xxh32 >> 8 & 0xFF), data blocks with the high-bit uncompressed
-  flag, the 0x00000000 EndMark, optional per-block xxh32 and
-  content xxh32, and linked-block mode (matches reaching back into
-  the previous block's window when B.Indep = 0).
-- Skippable frames 0x184D2A50..5F, and multi-frame walks returning
-  per-frame byte offsets — the split points a distributed
-  ``.jsonl.lz4`` reader fans out on (``lz4_frames``), plus the
-  boundary-spanning JSONL record walk (``jsonl_lz4_records``)
-  mirroring the zstd one.
-- xxh32 (xxHash spec): the frame format's checksum primitive, kept
-  here because multimodal/zstd.py only needed the 64-bit variant.
+- Frame walk, from spec, header-only: magic 0x184D2204, FLG (version
+  01, block independence, block checksums, content size, content
+  checksum, DictID — refused), BD max-block-size codes 4..7, the
+  header-checksum byte (xxh32 >> 8 & 0xFF), the data-block sizes with
+  their high-bit uncompressed flag, the 0x00000000 EndMark and the
+  optional checksum fields. Skippable frames 0x184D2A50..5F. The walk
+  returns per-frame byte offsets — the split points a distributed
+  ``.jsonl.lz4`` reader fans out on (``lz4_frames``) — and every
+  truncation raises ``ValueError``.
+- Payload decode: each walked frame is decoded by pyarrow's bundled
+  liblz4 (``multimodal/deflate.py:arrow_decode``), which verifies
+  the block and content xxh32 checksums and follows linked blocks.
+- Raw blocks (``lz4_block_decode``), from spec: the one decoder for
+  the headerless blocks inside Hadoop SequenceFiles and ORC streams
+  (a raw block carries no decoded size, which pyarrow's raw codec
+  needs up front). Token byte (literal length / match length - 4
+  nibbles), 255-saturated length extensions, 2-byte match offsets
+  (offset 0 is corruption), overlapping-match copies, final
+  literals-only sequence.
+- ``xxh32`` (xxHash spec): the frame format's checksum primitive,
+  used by the encoder and the header-checksum check.
 
 Encoder (complete enough that the CLI accepts everything we emit):
 greedy single-probe hash-table match finder (the classic LZ4-fast
 shape), the block-format end rules (last 5 bytes literal, no match
 starting within the final 12), incompressible blocks stored raw,
 all FLG feature bits emittable. Fixtures in oracle-checked queries
-use THIS encoder (no lz4 library ships with CPython); the CLI pins
-foreign interop in tests and cluster_smoke on equipped hosts.
+use THIS encoder; the CLI pins foreign interop in tests and
+cluster_smoke on equipped hosts.
 
 Scale posture: identical to the codec family — a frame decodes
 sequentially by construction, the corpus layout is many independent
@@ -51,6 +51,8 @@ driver.
 from __future__ import annotations
 
 import struct
+
+from etl_everywhere_hub_spark.multimodal.deflate import arrow_decode
 
 _MAGIC = 0x184D2204
 _SKIP_LO = 0x184D2A50
@@ -232,89 +234,70 @@ def _emit_sequence(out: bytearray, lit: bytes, off: int, mlen_m4: int) -> None:
 _BD_SIZES = {4: 1 << 16, 5: 1 << 18, 6: 1 << 20, 7: 1 << 22}
 
 
+def _need(data: bytes, pos: int, n: int, what: str) -> None:
+    if pos + n > len(data):
+        raise ValueError(f"lz4: truncated {what} at byte {pos}")
+
+
 def decode_frame(data: bytes, pos: int = 0) -> dict:
     """Decode ONE frame starting at byte ``pos``. Returns {data,
     offset, end, skippable, n_blocks, block_indep, checksummed}.
     Skippable frames return data=b'' with their payload skipped."""
-    if pos + 4 > len(data):
-        raise ValueError("lz4: truncated magic")
+    _need(data, pos, 4, "magic")
     magic = struct.unpack_from("<I", data, pos)[0]
     if _SKIP_LO <= magic <= _SKIP_HI:
-        if pos + 8 > len(data):
-            raise ValueError("lz4: truncated skippable frame header")
+        _need(data, pos, 8, "skippable frame header")
         size = struct.unpack_from("<I", data, pos + 4)[0]
-        end = pos + 8 + size
-        if end > len(data):
-            raise ValueError("lz4: skippable frame overruns input")
-        return {"data": b"", "offset": pos, "end": end, "skippable": True,
-                "n_blocks": 0, "block_indep": True, "checksummed": False}
+        _need(data, pos + 8, size, "skippable frame")
+        return {"data": b"", "offset": pos, "end": pos + 8 + size,
+                "skippable": True, "n_blocks": 0, "block_indep": True,
+                "checksummed": False}
     if magic != _MAGIC:
         raise ValueError(f"lz4: bad magic {magic:#010x} at byte {pos}")
     p = pos + 4
+    _need(data, p, 2, "frame descriptor")
     flg = data[p]
     bd = data[p + 1]
     if (flg >> 6) != 0b01:
         raise ValueError("lz4: unsupported frame version")
     if flg & 0x02:
         raise ValueError("lz4: reserved FLG bit set")
+    if flg & 0x01:
+        raise ValueError("lz4: DictID frames unsupported (stated boundary)")
     block_indep = bool(flg & 0x20)
     block_cksum = bool(flg & 0x10)
-    has_csize = bool(flg & 0x08)
     content_cksum = bool(flg & 0x04)
-    has_dict = bool(flg & 0x01)
     bs_code = (bd >> 4) & 0x7
     if bd & 0x8F:
         raise ValueError("lz4: reserved BD bits set")
     if bs_code not in _BD_SIZES:
         raise ValueError(f"lz4: bad max-block-size code {bs_code}")
     p += 2
-    csize = None
-    if has_csize:
-        csize = struct.unpack_from("<Q", data, p)[0]
+    if flg & 0x08:  # liblz4 checks the declared content size
+        _need(data, p, 8, "content size")
         p += 8
-    if has_dict:
-        raise ValueError("lz4: DictID frames unsupported (stated boundary)")
-    hdr = data[pos + 4 : p]
-    hc = data[p]
-    p += 1
-    if hc != ((xxh32(hdr) >> 8) & 0xFF):
+    _need(data, p, 1, "header checksum")
+    if data[p] != ((xxh32(data[pos + 4 : p]) >> 8) & 0xFF):
         raise ValueError("lz4: frame header checksum mismatch")
-    out = bytearray()
+    p += 1
     n_blocks = 0
     while True:
+        _need(data, p, 4, "block size")
         bsz = struct.unpack_from("<I", data, p)[0]
         p += 4
         if bsz == 0:
             break  # EndMark
-        raw = bool(bsz & 0x80000000)
-        bsz &= 0x7FFFFFFF
+        bsz &= 0x7FFFFFFF  # the high bit flags an uncompressed block
         if bsz > _BD_SIZES[bs_code]:
             raise ValueError("lz4: block exceeds declared max size")
-        blk = data[p : p + bsz]
-        if len(blk) != bsz:
-            raise ValueError("lz4: block truncated")
-        p += bsz
-        if block_cksum:
-            want = struct.unpack_from("<I", data, p)[0]
-            p += 4
-            if xxh32(blk) != want:
-                raise ValueError("lz4: block checksum mismatch")
-        if raw:
-            out += blk
-        else:
-            window = b"" if block_indep else bytes(out[-65536:])
-            out += lz4_block_decode(blk, prefix=window)
+        _need(data, p, bsz + 4 * block_cksum, "block")
+        p += bsz + 4 * block_cksum
         n_blocks += 1
     if content_cksum:
-        want = struct.unpack_from("<I", data, p)[0]
+        _need(data, p, 4, "content checksum")
         p += 4
-        if xxh32(bytes(out)) != want:
-            raise ValueError("lz4: content checksum mismatch")
-    if csize is not None and csize != len(out):
-        raise ValueError(
-            f"lz4: content size header says {csize}, decoded {len(out)}"
-        )
-    return {"data": bytes(out), "offset": pos, "end": p, "skippable": False,
+    return {"data": arrow_decode("lz4", data, pos, p), "offset": pos,
+            "end": p, "skippable": False,
             "n_blocks": n_blocks, "block_indep": block_indep,
             "checksummed": content_cksum}
 

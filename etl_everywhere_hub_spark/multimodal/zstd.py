@@ -1,70 +1,36 @@
-"""Zstandard (RFC 8878) codec, dependency-free — round 12.
+"""Zstandard (RFC 8878): frame walk from spec, payload decode by libzstd.
 
 Why this belongs in the engine: gzip covered the WARC/Common Crawl
 layout (multimodal/deflate.py, q352/q353), but the dominant
 compression of CURRENT public LLM corpus releases (RedPajama, Dolma,
 most HF text dumps) is ``.jsonl.zst`` — an ingestion layer that reads
-WARC.gz but not zstd misses the majority of modern corpus drops
-(VERDICT r11 "What's missing" #1). As with deflate.py, the decoder is
-implemented from the spec (RFC 8878, which IS the Zstandard format
-document), pinned against hand-built streams AND the ``zstd`` CLI as
-a FOREIGN encoder where present; no zstd library exists in this
-container.
+WARC.gz but not zstd misses the majority of modern corpus drops.
 
-Implemented from spec (decoder — complete standard-frame surface):
-- Frame layout (§3.1.1): magic 0xFD2FB528, Frame_Header_Descriptor
-  (FCS field sizes 0/1/2/4/8 with the +256 bias on the 2-byte form,
-  Single_Segment, Content_Checksum, Dictionary_ID 0/1/2/4),
-  Window_Descriptor exponent/mantissa, reserved-bit check.
-- Blocks (§3.1.1.2): Raw / RLE / Compressed, 21-bit Block_Size,
-  Last_Block walk; back-references reach across blocks within the
-  frame window.
-- Literals section (§3.1.1.3.1): Raw / RLE / Compressed / Treeless,
-  all five Size_Format layouts, 1-stream and 4-stream Huffman with
-  the 6-byte jump table and the (r+3)/4 per-stream regenerated split.
-- Huffman (§4.2): direct 4-bit weights and FSE-compressed weights
-  (two interleaved states, accuracy ≤ 6), the implied final weight
-  completing a power of two, canonical code assignment from lowest
-  weight, max 11-bit codes.
-- FSE (§4.1): normalized-count bitstream (value bracketing with the
-  low/high split, -1 "less-than-one" probabilities, 2-bit zero-run
-  repeat flags), table spread with step (S>>1)+(S>>3)+3 and the
-  high-threshold placement of -1 symbols, baseline/nbBits assignment.
-- Sequences (§3.1.1.3.2): Number_of_Sequences 1/2/3-byte forms,
-  Predefined / RLE / FSE_Compressed / Repeat modes per LL/OF/ML, the
-  three predefined distributions, the backward bitstream with the
-  1-marker, LL/OF/ML state init order, OF→ML→LL extra-bit read
-  order, LL→ML→OF state-update order, and the 3-slot repeat-offset
-  history including both literals_length==0 re-mappings and the
-  Repeat1-1 corner (offset 0 → corruption).
-- Content checksum: XXH64 (xxHash spec, Yann Collet; public) low 32
-  bits, verified when the frame declares it.
-- Skippable frames (§3.1.2) 0x184D2A50..5F, and MULTI-FRAME walks
-  returning per-frame offsets — the split points a distributed
-  .jsonl.zst reader fans out on.
+- Frame walk, from spec, header-only (no entropy decode): magic
+  0xFD2FB528, Frame_Header_Descriptor (FCS field sizes 0/1/2/4/8 with
+  the +256 bias on the 2-byte form, Single_Segment, Content_Checksum,
+  Dictionary_ID 0/1/2/4, reserved-bit check), Window_Descriptor
+  exponent/mantissa, the 3-byte block headers (Raw / RLE / Compressed,
+  21-bit Block_Size, Last_Block) and the 4-byte checksum trailer.
+  Skippable frames (§3.1.2) 0x184D2A50..5F return their user data.
+  The walk yields exact per-frame byte ranges — the split points a
+  distributed .jsonl.zst reader fans out on — and every truncation
+  raises ``ValueError``.
+- Payload decode: each walked frame is decoded by pyarrow's bundled
+  libzstd (``multimodal/deflate.py:arrow_decode``), which also
+  verifies the XXH64 content checksum and the declared content size.
+- Dictionaries (§5) are not decoded: a frame declaring a non-zero
+  Dictionary_ID is refused with ``requires dictionary N``.
 
 Encoder (honest subset — enough to build spec-valid fixtures without
 the CLI): Raw and RLE blocks, Huffman-compressed literals with a
 zero-sequence section (direct-weight trees, 1-stream and 4-stream,
 length-limited Kraft-exact code construction), single-segment and
-windowed headers, FCS, content checksums, skippable frames. It does
-NOT emit LZ sequences or FSE-compressed weights — decode coverage for
-those paths comes from the zstd CLI as a foreign encoder in
-tests/test_zstd.py (and raises loudly on inputs it cannot express:
-Huffman literals whose max symbol exceeds 127 fall back to raw, by
-the direct-weight header's own 127-weight bound).
-
-Dictionaries (§5, round 12 — the round-11 boundary removed): both
-structured dictionaries (magic 0xEC30A437: Dictionary_ID, literals
-Huffman table, OF/ML/LL FSE tables in that order, three initial
-repeat offsets, window-seeding content) and raw-content fallbacks
-are supported on DECODE — ``decode_frame(..., dictionary=...)`` —
-with the ID handshake enforced (a frame declaring a Dictionary_ID
-refuses to decode without a matching dictionary; wrong-dict decodes
-are corruption, never silent). Fixtures come from ``zstd --train``
-as a FOREIGN dictionary builder. The ENCODER still does not emit
-dictionary frames (it emits no LZ sequences at all) — that remains
-the stated boundary.
+windowed headers, FCS, content checksums (``xxh64``), skippable
+frames. It does NOT emit LZ sequences, FSE-compressed weights or
+dictionary frames; tests/test_zstd.py pins it against the ``zstd`` CLI
+as a foreign decoder, and the CLI as a foreign encoder covers those
+decode paths.
 
 Scale shape: like gzip members (deflate.py), the FRAME is the
 parallel unit — corpus releases shard into many .zst files/frames; a
@@ -74,6 +40,8 @@ state (q357)."""
 from __future__ import annotations
 
 import struct
+
+from etl_everywhere_hub_spark.multimodal.deflate import arrow_decode
 
 _MAGIC = 0xFD2FB528
 _SKIP_LO, _SKIP_HI = 0x184D2A50, 0x184D2A5F
@@ -139,632 +107,56 @@ def xxh64(data: bytes, seed: int = 0) -> int:
     return acc ^ (acc >> 32)
 
 
-# ------------------------------------------------- bit-layer readers
-class _FwdBits:
-    """Forward LSB-first bit reader (FSE normalized-count header —
-    RFC 8878 §4.1.1 reads the distribution little-endian, front to
-    back, with peek/consume semantics)."""
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.base = pos
-        self.bit = 0
-
-    def peek(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            b = self.bit + i
-            byte = self.base + (b >> 3)
-            bit = (self.data[byte] >> (b & 7)) & 1 if byte < len(self.data) else 0
-            v |= bit << i
-        return v
-
-    def consume(self, n: int) -> None:
-        self.bit += n
-
-    def bits(self, n: int) -> int:
-        v = self.peek(n)
-        self.consume(n)
-        return v
-
-    def end_byte(self) -> int:
-        """Byte offset just past the consumed bits (rounded up)."""
-        return self.base + ((self.bit + 7) >> 3)
-
-
-class _BackBits:
-    """Backward bitstream (RFC 8878 §3.1.1.3.2.1.1): the last byte
-    carries a 1-marker as its highest set bit; reading starts just
-    below the marker and moves toward the front, each read(n)
-    returning the n bits below the cursor as an MSB-first group.
-    Reads past the front zero-fill (the Huffman loop is bounded by
-    the regenerated size, exactly how reference decoders finish)."""
-
-    def __init__(self, data: bytes):
-        if not data or data[-1] == 0:
-            raise ValueError("zstd: backward bitstream missing 1-marker")
-        self.data = data
-        self.pos = len(data) * 8 - (8 - data[-1].bit_length()) - 1
-
-    def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        v = 0
-        for i in range(n):
-            b = self.pos - 1 - i  # MSB of the group first
-            bit = (self.data[b >> 3] >> (b & 7)) & 1 if b >= 0 else 0
-            v = (v << 1) | bit
-        self.pos -= n
-        return v
-
-    def exhausted(self) -> bool:
-        return self.pos <= 0
-
-
-# ----------------------------------------------------------- FSE
-def fse_read_ncount(data: bytes, pos: int, max_accuracy: int) -> tuple:
-    """Parse an FSE normalized-count distribution (§4.1.1). Returns
-    (counts, accuracy_log, end_pos). Counts may contain -1 ("less
-    than one" probability)."""
-    br = _FwdBits(data, pos)
-    al = br.bits(4) + 5
-    if al > max_accuracy:
-        raise ValueError(f"zstd: accuracy log {al} > max {max_accuracy}")
-    remaining = (1 << al) + 1
-    threshold = 1 << al
-    nbits = al + 1
-    counts: list = []
-    prev_zero = False
-    while remaining > 1:
-        if prev_zero:
-            rep = br.bits(2)
-            counts.extend([0] * rep)
-            while rep == 3:
-                rep = br.bits(2)
-                counts.extend([0] * rep)
-            prev_zero = False
-            continue
-        # value bracketing: small values use nbits-1 bits
-        max_small = 2 * threshold - 1 - remaining
-        v = br.peek(nbits)
-        low = v & (threshold - 1)
-        if low < max_small:
-            count = low
-            br.consume(nbits - 1)
-        else:
-            count = v & (2 * threshold - 1)
-            if count >= threshold:
-                count -= max_small
-            br.consume(nbits)
-        count -= 1  # shifted so -1 encodes the less-than-one prob
-        remaining -= -count if count < 0 else count
-        counts.append(count)
-        prev_zero = count == 0
-        while remaining < threshold:
-            nbits -= 1
-            threshold >>= 1
-    if remaining != 1:
-        raise ValueError("zstd: corrupted FSE normalized counts")
-    return counts, al, br.end_byte()
-
-
-def fse_build_dtable(counts: list, al: int) -> list:
-    """Build the FSE decode table (§4.1.1.2): list of (symbol,
-    nb_bits, baseline) indexed by state."""
-    size = 1 << al
-    symbols = [0] * size
-    high = size - 1
-    next_occ = {}
-    for s, c in enumerate(counts):
-        if c == -1:
-            symbols[high] = s
-            high -= 1
-            next_occ[s] = 1
-        elif c > 0:
-            next_occ[s] = c
-    step = (size >> 1) + (size >> 3) + 3
-    posn = 0
-    for s, c in enumerate(counts):
-        if c <= 0:
-            continue
-        for _ in range(c):
-            symbols[posn] = s
-            posn = (posn + step) & (size - 1)
-            while posn > high:
-                posn = (posn + step) & (size - 1)
-    if posn != 0:
-        raise ValueError("zstd: FSE table spread did not close")
-    table = []
-    for st in range(size):
-        s = symbols[st]
-        nxt = next_occ[s]
-        next_occ[s] = nxt + 1
-        nb = al - (nxt.bit_length() - 1)
-        table.append((s, nb, (nxt << nb) - size))
-    return table
-
-
-class _FseState:
-    def __init__(self, table: list, al: int, br: _BackBits):
-        self.table = table
-        self.state = br.read(al)
-
-    def symbol(self) -> int:
-        return self.table[self.state][0]
-
-    def update(self, br: _BackBits) -> None:
-        _s, nb, base = self.table[self.state]
-        self.state = base + br.read(nb)
-
-
-def _rle_table(symbol: int) -> list:
-    """Degenerate 1-state FSE table for RLE symbol mode (§3.1.1.3.2.1):
-    always that symbol, zero bits consumed."""
-    return [(symbol, 0, 0)]
-
-
-# ------------------------------------------------------- Huffman
-def _huf_read_weights(data: bytes, pos: int) -> tuple:
-    """Parse a Huffman_Tree_Description (§4.2.1): direct 4-bit
-    weights (header >= 128) or FSE-compressed weights (two
-    interleaved states, accuracy <= 6). Returns (weights_with_last,
-    end_pos)."""
-    hb = data[pos]
-    pos += 1
-    if hb >= 128:
-        n = hb - 127
-        weights = []
-        for i in range(n):
-            b = data[pos + (i >> 1)]
-            weights.append((b >> 4) if i % 2 == 0 else (b & 0x0F))
-        pos += (n + 1) >> 1
-    else:
-        comp = data[pos : pos + hb]
-        if len(comp) != hb:
-            raise ValueError("zstd: truncated FSE weight stream")
-        counts, al, hpos = fse_read_ncount(comp, 0, 6)
-        table = fse_build_dtable(counts, al)
-        br = _BackBits(comp[hpos:])
-        even = _FseState(table, al, br)
-        if br.pos < 0:
-            raise ValueError("zstd: FSE weight stream too short for states")
-        odd = _FseState(table, al, br)
-        if br.pos < 0:
-            raise ValueError("zstd: FSE weight stream too short for states")
-        weights = []
-        # §4.2.1.2: states alternate; a state whose update would read
-        # past the front emits the OTHER state's symbol and ends the
-        # stream (reference FSE_decompress two-state loop).
-        while True:
-            weights.append(even.symbol())
-            even.update(br)
-            if br.pos < 0:
-                weights.append(odd.symbol())
-                break
-            weights.append(odd.symbol())
-            odd.update(br)
-            if br.pos < 0:
-                weights.append(even.symbol())
-                break
-            if len(weights) > 255:
-                raise ValueError("zstd: >255 Huffman weights")
-        pos += hb
-    # implied last weight completes the next power of two (§4.2.1)
-    total = sum((1 << (w - 1)) for w in weights if w > 0)
-    if total == 0:
-        raise ValueError("zstd: empty Huffman weight set")
-    # smallest 2^k strictly greater than total (equality is corrupt:
-    # the last weight must be >= 1)
-    nextp = 1 << total.bit_length()
-    left = nextp - total
-    if left & (left - 1):
-        raise ValueError("zstd: Huffman weights do not complete a power of 2")
-    weights.append(left.bit_length())
-    return weights, pos
-
-
-def huf_build_dtable(weights: list) -> tuple:
-    """Canonical Huffman decode table (§4.2.1.3): codes assigned from
-    the lowest weight (longest code) upward, ascending symbol order
-    within a weight. Returns (table, max_bits) where table[idx] =
-    (symbol, nb_bits) indexed by the top max_bits bits of the
-    stream."""
-    total = sum((1 << (w - 1)) for w in weights if w > 0)
-    if total & (total - 1):
-        raise ValueError("zstd: Huffman Kraft sum not a power of 2")
-    max_bits = total.bit_length() - 1
-    if max_bits > 11:
-        raise ValueError("zstd: Huffman code length > 11 bits")
-    table = [(0, 0)] * (1 << max_bits)
-    posn = 0
-    for w in range(1, max(weights) + 1):
-        for sym, sw in enumerate(weights):
-            if sw != w:
-                continue
-            nb = max_bits + 1 - w
-            span = 1 << (w - 1)
-            for k in range(span):
-                table[posn + k] = (sym, nb)
-            posn += span
-    if posn != len(table):
-        raise ValueError("zstd: Huffman table fill incomplete")
-    return table, max_bits
-
-
-def _huf_decode_stream(stream: bytes, table: list, max_bits: int, n_out: int) -> bytes:
-    """Decode one Huffman bitstream: peek max_bits (MSB-first from
-    the backward cursor), emit, consume the entry's nb_bits."""
-    br = _BackBits(stream)
-    out = bytearray()
-    mask = (1 << max_bits) - 1
-    while len(out) < n_out:
-        # peek max_bits without consuming (zero-filled past the front)
-        save = br.pos
-        idx = br.read(max_bits) & mask
-        sym, nb = table[idx]
-        br.pos = save - nb
-        out.append(sym)
-    if br.pos < -7:
-        raise ValueError("zstd: Huffman stream overrun")
-    return bytes(out)
-
-
-# ----------------------------------------------- predefined tables
-# RFC 8878 §3.1.1.3.2.2.1 — default distributions
-_LL_DEFAULT = (
-    [4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1, 2, 2, 2, 2, 2, 2,
-     2, 2, 2, 3, 2, 1, 1, 1, 1, 1, -1, -1, -1, -1],
-    6,
-)
-_ML_DEFAULT = (
-    [1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-     1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-     1, 1, -1, -1, -1, -1, -1, -1, -1],
-    6,
-)
-_OF_DEFAULT = (
-    [1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-     1, 1, -1, -1, -1, -1, -1],
-    5,
-)
-
-# §3.1.1.3.2.1.1 — literals-length code → (baseline, extra bits)
-_LL_CODE = [(i, 0) for i in range(16)] + [
-    (16, 1), (18, 1), (20, 1), (22, 1), (24, 2), (28, 2), (32, 3),
-    (40, 3), (48, 4), (64, 6), (128, 7), (256, 8), (512, 9), (1024, 10),
-    (2048, 11), (4096, 12), (8192, 13), (16384, 14), (32768, 15),
-    (65536, 16),
-]
-# match-length code → (baseline, extra bits)
-_ML_CODE = [(i + 3, 0) for i in range(32)] + [
-    (35, 1), (37, 1), (39, 1), (41, 1), (43, 2), (47, 2), (51, 3),
-    (59, 3), (67, 4), (83, 4), (99, 5), (131, 7), (259, 8), (515, 9),
-    (1027, 10), (2051, 11), (4099, 12), (8195, 13), (16387, 14),
-    (32771, 15), (65539, 16),
-]
-
-_MAX_LL_SYM, _MAX_OF_SYM, _MAX_ML_SYM = 35, 31, 52
-_MAX_LL_AL, _MAX_OF_AL, _MAX_ML_AL = 9, 8, 9
-
-
-# -------------------------------------------------- literals section
-def _decode_literals(data: bytes, pos: int, huf_ctx: dict) -> tuple:
-    """Decode a Literals_Section (§3.1.1.3.1). Returns (literals,
-    end_pos). ``huf_ctx['table']`` persists the Huffman table across
-    blocks of one frame for Treeless_Literals_Block."""
-    hb = data[pos]
-    lb_type = hb & 3
-    size_fmt = (hb >> 2) & 3
-    if lb_type in (0, 1):  # Raw / RLE
-        if size_fmt in (0, 2):
-            rsize = hb >> 3
-            pos += 1
-        elif size_fmt == 1:
-            rsize = (hb >> 4) | (data[pos + 1] << 4)
-            pos += 2
-        else:
-            rsize = (hb >> 4) | (data[pos + 1] << 4) | (data[pos + 2] << 12)
-            pos += 3
-        if lb_type == 0:
-            lits = bytes(data[pos : pos + rsize])
-            if len(lits) != rsize:
-                raise ValueError("zstd: truncated raw literals")
-            return lits, pos + rsize
-        return bytes([data[pos]]) * rsize, pos + 1
-    # Compressed (2) / Treeless (3)
-    if size_fmt == 0:
-        h = data[pos] | (data[pos + 1] << 8) | (data[pos + 2] << 16)
-        rsize = (h >> 4) & 0x3FF
-        csize = (h >> 14) & 0x3FF
-        streams, pos = 1, pos + 3
-    elif size_fmt == 1:
-        h = data[pos] | (data[pos + 1] << 8) | (data[pos + 2] << 16)
-        rsize = (h >> 4) & 0x3FF
-        csize = (h >> 14) & 0x3FF
-        streams, pos = 4, pos + 3
-    elif size_fmt == 2:
-        h = (data[pos] | (data[pos + 1] << 8) | (data[pos + 2] << 16)
-             | (data[pos + 3] << 24))
-        rsize = (h >> 4) & 0x3FFF
-        csize = (h >> 18) & 0x3FFF
-        streams, pos = 4, pos + 4
-    else:
-        h = (data[pos] | (data[pos + 1] << 8) | (data[pos + 2] << 16)
-             | (data[pos + 3] << 24) | (data[pos + 4] << 32))
-        rsize = (h >> 4) & 0x3FFFF
-        csize = (h >> 22) & 0x3FFFF
-        streams, pos = 4, pos + 5
-    section_end = pos + csize
-    if lb_type == 2:
-        weights, pos = _huf_read_weights(data, pos)
-        huf_ctx["table"] = huf_build_dtable(weights)
-    elif "table" not in huf_ctx:
-        raise ValueError("zstd: treeless literals with no previous tree")
-    table, max_bits = huf_ctx["table"]
-    if streams == 1:
-        stream = data[pos:section_end]
-        lits = _huf_decode_stream(stream, table, max_bits, rsize)
-        return lits, section_end
-    # 4 streams: 6-byte jump table, then streams 1-3 sized, 4th rest
-    s1, s2, s3 = struct.unpack_from("<HHH", data, pos)
-    pos += 6
-    ends = [pos + s1, pos + s1 + s2, pos + s1 + s2 + s3, section_end]
-    starts = [pos, ends[0], ends[1], ends[2]]
-    if ends[2] > section_end:
-        raise ValueError("zstd: 4-stream jump table exceeds section")
-    part = (rsize + 3) >> 2
-    sizes = [part, part, part, rsize - 3 * part]
-    if sizes[3] < 0:
-        raise ValueError("zstd: negative 4th-stream regenerated size")
-    lits = b"".join(
-        _huf_decode_stream(data[starts[k] : ends[k]], table, max_bits, sizes[k])
-        for k in range(4)
-    )
-    return lits, section_end
-
-
-# -------------------------------------------------- sequences section
-def _read_seq_table(data, pos, mode, category, ctx):
-    """Resolve one of LL/OF/ML per its 2-bit compression mode
-    (§3.1.1.3.2.1): returns (table, accuracy_log, new_pos)."""
-    default, max_al, max_sym = {
-        "ll": (_LL_DEFAULT, _MAX_LL_AL, _MAX_LL_SYM),
-        "of": (_OF_DEFAULT, _MAX_OF_AL, _MAX_OF_SYM),
-        "ml": (_ML_DEFAULT, _MAX_ML_AL, _MAX_ML_SYM),
-    }[category]
-    if mode == 0:  # Predefined
-        counts, al = default
-        entry = (fse_build_dtable(counts, al), al)
-    elif mode == 1:  # RLE: one byte = the constant symbol
-        sym = data[pos]
-        pos += 1
-        if sym > max_sym:
-            raise ValueError(f"zstd: RLE {category} symbol {sym} out of range")
-        entry = (_rle_table(sym), 0)
-    elif mode == 2:  # FSE_Compressed
-        counts, al, pos = fse_read_ncount(data, pos, max_al)
-        if len(counts) - 1 > max_sym:
-            raise ValueError(f"zstd: {category} ncount exceeds max symbol")
-        entry = (fse_build_dtable(counts, al), al)
-    else:  # Repeat
-        if category not in ctx:
-            raise ValueError(f"zstd: repeat {category} table with no previous")
-        entry = ctx[category]
-    ctx[category] = entry
-    return entry[0], entry[1], pos
-
-
-def _decode_sequences(data: bytes, pos: int, end: int, fse_ctx: dict) -> list:
-    """Decode a Sequences_Section (§3.1.1.3.2) into a list of
-    (literals_run, offset_value, match_len) triples; offset_value is
-    the PRE-history value (repeat resolution happens in execution
-    where literals_length is known)."""
-    b0 = data[pos]
-    if b0 == 0:
-        return []
-    if b0 < 128:
-        nseq, pos = b0, pos + 1
-    elif b0 < 255:
-        nseq, pos = ((b0 - 128) << 8) + data[pos + 1], pos + 2
-    else:
-        nseq, pos = data[pos + 1] + (data[pos + 2] << 8) + 0x7F00, pos + 3
-    modes = data[pos]
-    pos += 1
-    if modes & 3:
-        raise ValueError("zstd: reserved sequence-mode bits set")
-    ll_t, ll_al, pos = _read_seq_table(data, pos, (modes >> 6) & 3, "ll", fse_ctx)
-    of_t, of_al, pos = _read_seq_table(data, pos, (modes >> 4) & 3, "of", fse_ctx)
-    ml_t, ml_al, pos = _read_seq_table(data, pos, (modes >> 2) & 3, "ml", fse_ctx)
-    br = _BackBits(data[pos:end])
-    ll_s = _FseState(ll_t, ll_al, br)
-    of_s = _FseState(of_t, of_al, br)
-    ml_s = _FseState(ml_t, ml_al, br)
-    seqs = []
-    for i in range(nseq):
-        of_code = of_s.symbol()
-        if of_code > 31:
-            raise ValueError("zstd: offset code out of range")
-        ml_code = ml_s.symbol()
-        ll_code = ll_s.symbol()
-        # extra-bit read order: offset, match, literals (§3.1.1.3.2.1.1)
-        offset_value = (1 << of_code) + br.read(of_code)
-        ml_base, ml_extra = _ML_CODE[ml_code]
-        ml = ml_base + br.read(ml_extra)
-        ll_base, ll_extra = _LL_CODE[ll_code]
-        ll = ll_base + br.read(ll_extra)
-        seqs.append((ll, offset_value, ml))
-        if i < nseq - 1:
-            # state-update order: LL, ML, OF
-            ll_s.update(br)
-            ml_s.update(br)
-            of_s.update(br)
-    if br.pos < 0:
-        raise ValueError("zstd: sequence bitstream overrun")
-    if br.pos != 0:
-        raise ValueError("zstd: sequence bitstream not fully consumed")
-    return seqs
-
-
-def _execute_sequences(out: bytearray, lits: bytes, seqs: list,
-                       window: int, rep: list) -> None:
-    """§3.1.1.4: interleave literal runs and match copies, resolving
-    the 3-slot repeat-offset history — ``rep`` is FRAME-scoped state
-    (initialized to 1/4/8 at frame start, persisting ACROSS blocks;
-    §3.1.1.5), with the literals_length==0 re-mapping and the
-    Repeat1-1 corner."""
-    lpos = 0
-    for ll, offset_value, ml in seqs:
-        out += lits[lpos : lpos + ll]
-        lpos += ll
-        if offset_value > 3:
-            offset = offset_value - 3
-            rep[2] = rep[1]
-            rep[1] = rep[0]
-            rep[0] = offset
-        else:
-            idx = offset_value - 1 if ll != 0 else offset_value  # remap
-            if idx == 0:
-                offset = rep[0]
-            elif idx == 1:
-                offset = rep[1]
-                rep[1] = rep[0]
-                rep[0] = offset
-            elif idx == 2:
-                offset = rep[2]
-                rep[2] = rep[1]
-                rep[1] = rep[0]
-                rep[0] = offset
-            else:  # ll == 0 and offset_value == 3: Repeat1 - 1
-                offset = rep[0] - 1
-                if offset == 0:
-                    raise ValueError("zstd: repeat offset underflow (corrupt)")
-                rep[2] = rep[1]
-                rep[1] = rep[0]
-                rep[0] = offset
-        if offset > len(out) or offset > window:
-            raise ValueError("zstd: match offset beyond window")
-        start = len(out) - offset
-        for k in range(ml):  # byte-wise: overlap copies self-extend
-            out.append(out[start + k])
-    out += lits[lpos:]  # last literals after the final sequence
-
-
-# ------------------------------------------------------ dictionaries
-_DICT_MAGIC = 0xEC30A437
-
-
-def parse_dictionary(data: bytes) -> dict:
-    """Parse a zstd dictionary (RFC 8878 §5). Structured dictionaries
-    (magic 0xEC30A437) carry a Dictionary_ID, entropy tables — one
-    Huffman_Tree_Description for literals, then FSE tables for
-    OFFSETS, MATCH LENGTHS and LITERALS LENGTHS in that exact order —
-    three 4-byte initial repeat offsets, and the content that seeds
-    the window. Anything without the magic is a RAW-content
-    dictionary (id 0, default tables/offsets), which the reference
-    CLI also accepts — same fallback here."""
-    if len(data) >= 8 and struct.unpack_from("<I", data, 0)[0] == _DICT_MAGIC:
-        did = struct.unpack_from("<I", data, 4)[0]
-        pos = 8
-        weights, pos = _huf_read_weights(data, pos)
-        huf = huf_build_dtable(weights)
-        fse = {}
-        for cat, max_al, max_sym in (
-            ("of", _MAX_OF_AL, _MAX_OF_SYM),
-            ("ml", _MAX_ML_AL, _MAX_ML_SYM),
-            ("ll", _MAX_LL_AL, _MAX_LL_SYM),
-        ):
-            counts, al, pos = fse_read_ncount(data, pos, max_al)
-            if len(counts) - 1 > max_sym:
-                raise ValueError(f"zstd: dict {cat} ncount exceeds max symbol")
-            fse[cat] = (fse_build_dtable(counts, al), al)
-        reps = list(struct.unpack_from("<III", data, pos))
-        pos += 12
-        if any(r == 0 for r in reps):
-            raise ValueError("zstd: dictionary repeat offset of 0 (corrupt)")
-        return {
-            "dict_id": did,
-            "content": bytes(data[pos:]),
-            "huf": huf,
-            "fse": fse,
-            "reps": reps,
-        }
-    return {
-        "dict_id": 0,
-        "content": bytes(data),
-        "huf": None,
-        "fse": {},
-        "reps": [1, 4, 8],
-    }
-
-
 # ----------------------------------------------------------- frames
-def decode_frame(data: bytes, pos: int = 0, dictionary=None) -> dict:
-    """Decode ONE frame starting at ``pos``. Returns a dict with
-    frame_start / frame_end / kind ('zstd' | 'skippable') / payload
-    (decoded bytes; skippable frames carry their raw user data) plus,
-    for zstd frames: window_size, content_size (declared, or None),
-    checksum_present, checksum_ok (None when absent), n_blocks,
-    single_segment.
+def _need(data: bytes, pos: int, n: int, what: str) -> None:
+    if pos + n > len(data):
+        raise ValueError(f"zstd: truncated {what} at byte {pos}")
 
-    ``dictionary`` (RFC 8878 §5): raw bytes or a parse_dictionary
-    dict. When supplied, its content seeds the window (back-
-    references reach into it), its entropy tables become the initial
-    repeat tables (a first block may use Treeless literals / Repeat
-    sequence modes), and its repeat offsets replace the 1/4/8 init.
-    A frame DECLARING a Dictionary_ID refuses to decode without a
-    matching dictionary — wrong-dict decodes are corruption, never
-    silent."""
-    if isinstance(dictionary, (bytes, bytearray)):
-        dictionary = parse_dictionary(bytes(dictionary))
+
+def _walk_frame(data: bytes, pos: int = 0) -> dict:
+    """Header-only walk of ONE frame starting at ``pos``: the
+    decode_frame dict without ``payload`` for zstd frames (skippable
+    frames carry their raw user data as ``payload``)."""
     start = pos
+    _need(data, pos, 4, "frame magic")
     (magic,) = struct.unpack_from("<I", data, pos)
     pos += 4
     if _SKIP_LO <= magic <= _SKIP_HI:
+        _need(data, pos, 4, "skippable frame size")
         (fsize,) = struct.unpack_from("<I", data, pos)
         pos += 4
-        payload = bytes(data[pos : pos + fsize])
-        if len(payload) != fsize:
-            raise ValueError("zstd: truncated skippable frame")
+        _need(data, pos, fsize, "skippable frame")
         return {
             "frame_start": start,
             "frame_end": pos + fsize,
             "kind": "skippable",
-            "payload": payload,
+            "payload": bytes(data[pos : pos + fsize]),
             "magic_nibble": magic - _SKIP_LO,
         }
     if magic != _MAGIC:
         raise ValueError(f"zstd: bad magic 0x{magic:08X} at {start}")
+    _need(data, pos, 1, "frame header")
     fhd = data[pos]
     pos += 1
-    fcs_flag = fhd >> 6
-    single_segment = bool(fhd & 0x20)
     if fhd & 0x08:
         raise ValueError("zstd: reserved frame-header bit set")
+    single_segment = bool(fhd & 0x20)
     checksum_present = bool(fhd & 0x04)
-    did_flag = fhd & 3
+    did_len = (0, 1, 2, 4)[fhd & 3]
+    fcs_len = (1 if single_segment else 0, 2, 4, 8)[fhd >> 6]
+    _need(data, pos, (0 if single_segment else 1) + did_len + fcs_len,
+          "frame header")
     window_size = None
     if not single_segment:
-        wd = data[pos]
+        exponent, mantissa = data[pos] >> 3, data[pos] & 7
         pos += 1
-        exponent, mantissa = wd >> 3, wd & 7
         base = 1 << (10 + exponent)
         window_size = base + (base >> 3) * mantissa
-    did_len = (0, 1, 2, 4)[did_flag]
-    if did_len:
-        dict_id = int.from_bytes(data[pos : pos + did_len], "little")
-        pos += did_len
-        if dict_id != 0:
-            if dictionary is None:
-                raise ValueError(
-                    f"zstd: frame requires dictionary {dict_id} — pass "
-                    "dictionary= (decoding without it is corruption)"
-                )
-            if dictionary["dict_id"] not in (0, dict_id):
-                raise ValueError(
-                    f"zstd: frame requires dictionary {dict_id}, got "
-                    f"{dictionary['dict_id']}"
-                )
-    fcs_len = (1 if single_segment else 0, 2, 4, 8)[fcs_flag]
+    dict_id = int.from_bytes(data[pos : pos + did_len], "little")
+    pos += did_len
+    if dict_id:
+        raise ValueError(f"zstd: frame requires dictionary {dict_id}; "
+                         "dictionary frames are not decoded")
     content_size = None
     if fcs_len:
         content_size = int.from_bytes(data[pos : pos + fcs_len], "little")
@@ -773,103 +165,69 @@ def decode_frame(data: bytes, pos: int = 0, dictionary=None) -> dict:
         pos += fcs_len
     if single_segment:
         window_size = content_size
-    out = bytearray()
-    huf_ctx: dict = {}
-    fse_ctx: dict = {}
-    rep = [1, 4, 8]  # repeat-offset history is frame-scoped (§3.1.1.5)
-    prefix_len = 0
-    if dictionary is not None:
-        out += dictionary["content"]
-        prefix_len = len(out)
-        if dictionary["huf"] is not None:
-            huf_ctx["table"] = dictionary["huf"]
-        fse_ctx.update(dictionary["fse"])
-        rep = list(dictionary["reps"])
     n_blocks = 0
-    while True:
-        bh = data[pos] | (data[pos + 1] << 8) | (data[pos + 2] << 16)
+    last = 0
+    while not last:
+        _need(data, pos, 3, "block header")
+        bh = int.from_bytes(data[pos : pos + 3], "little")
         pos += 3
         last = bh & 1
         btype = (bh >> 1) & 3
-        bsize = bh >> 3
-        n_blocks += 1
-        if btype == 0:  # Raw
-            out += data[pos : pos + bsize]
-            pos += bsize
-        elif btype == 1:  # RLE: bsize = regenerated size, 1 content byte
-            out += bytes([data[pos]]) * bsize
-            pos += 1
-        elif btype == 2:  # Compressed
-            bend = pos + bsize
-            lits, lpos = _decode_literals(data, pos, huf_ctx)
-            seqs = _decode_sequences(data, lpos, bend, fse_ctx)
-            if seqs:
-                # the dict prefix is addressable beyond the window
-                _execute_sequences(
-                    out, lits, seqs,
-                    (window_size or len(out) + 1) + prefix_len, rep,
-                )
-            else:
-                out += lits
-            pos = bend
-        else:
+        if btype == 3:
             raise ValueError("zstd: reserved block type")
-        if last:
-            break
-    payload = bytes(out[prefix_len:])
-    checksum_ok = None
+        # an RLE block stores one byte; Block_Size is its repeat count
+        size = 1 if btype == 1 else bh >> 3
+        _need(data, pos, size, "block")
+        pos += size
+        n_blocks += 1
     if checksum_present:
-        (want,) = struct.unpack_from("<I", data, pos)
+        _need(data, pos, 4, "content checksum")
         pos += 4
-        checksum_ok = (xxh64(payload) & 0xFFFFFFFF) == want
-        if not checksum_ok:
-            raise ValueError("zstd: content checksum mismatch")
-    if content_size is not None and len(payload) != content_size:
-        raise ValueError(
-            f"zstd: declared content size {content_size} != decoded "
-            f"{len(payload)}"
-        )
     return {
         "frame_start": start,
         "frame_end": pos,
         "kind": "zstd",
-        "payload": payload,
         "window_size": window_size,
         "content_size": content_size,
         "checksum_present": checksum_present,
-        "checksum_ok": checksum_ok,
         "n_blocks": n_blocks,
         "single_segment": single_segment,
     }
 
 
-def zstd_frames(data: bytes, dictionary=None) -> list:
+def decode_frame(data: bytes, pos: int = 0) -> dict:
+    """Decode ONE frame starting at ``pos``. Returns a dict with
+    frame_start / frame_end / kind ('zstd' | 'skippable') / payload
+    (decoded bytes; skippable frames carry their raw user data) plus,
+    for zstd frames: window_size, content_size (declared, or None),
+    checksum_present, checksum_ok (None when absent; a mismatch
+    raises), n_blocks, single_segment."""
+    f = _walk_frame(data, pos)
+    if f["kind"] == "zstd":
+        f["payload"] = arrow_decode("zstd", data, f["frame_start"], f["frame_end"])
+        f["checksum_ok"] = True if f["checksum_present"] else None
+    return f
+
+
+def zstd_frames(data: bytes) -> list:
     """Multi-frame walk: decode every frame (zstd + skippable) in a
     concatenated stream, returning per-frame dicts with exact byte
     ranges — the split points a distributed reader fans out on, the
-    same role gunzip_members plays for WARC.gz. ``dictionary``
-    applies to every zstd frame (corpus shards trained against one
-    dictionary share it across all their frames)."""
-    if isinstance(dictionary, (bytes, bytearray)):
-        dictionary = parse_dictionary(bytes(dictionary))
+    same role gunzip_members plays for WARC.gz."""
     frames = []
     pos = 0
     while pos < len(data):
-        f = decode_frame(data, pos, dictionary=dictionary)
+        f = decode_frame(data, pos)
         frames.append(f)
         pos = f["frame_end"]
     return frames
 
 
-def decompress(data: bytes, dictionary=None) -> bytes:
+def decompress(data: bytes) -> bytes:
     """Concatenated-frame decompress (what `zstd -d` does): zstd
     frame payloads concatenate, skippable frames contribute
     nothing."""
-    return b"".join(
-        f["payload"]
-        for f in zstd_frames(data, dictionary=dictionary)
-        if f["kind"] == "zstd"
-    )
+    return b"".join(f["payload"] for f in zstd_frames(data) if f["kind"] == "zstd")
 
 
 def jsonl_zst_records(data: bytes) -> list:
@@ -900,9 +258,10 @@ def jsonl_zst_records(data: bytes) -> list:
 
 # ---------------------------------------------------------- encoder
 class _BackBitWriter:
-    """Writer for the backward bitstream: groups added LAST are read
-    FIRST by _BackBits, so callers add in reverse decode order.
-    close() appends the 1-marker above the top bit (§3.1.1.3.2.1.1)."""
+    """Writer for the backward bitstream: a decoder reads from the end,
+    so groups added LAST are read FIRST and callers add in reverse
+    decode order. close() appends the 1-marker above the top bit
+    (§3.1.1.3.2.1.1)."""
 
     def __init__(self):
         self.acc = 0
@@ -968,7 +327,8 @@ def _huf_weights(freq: dict) -> list | None:
 
 
 def _huf_codes(lengths: list) -> tuple:
-    """Canonical code values mirroring huf_build_dtable's fill:
+    """Canonical code values in the §4.2.1.3 order (codes assigned
+    from the lowest weight upward, ascending symbol within a weight):
     returns ({symbol: (code, nbits)}, max_bits)."""
     max_bits = max(lengths)
     weights = [max_bits + 1 - n if n else 0 for n in lengths]

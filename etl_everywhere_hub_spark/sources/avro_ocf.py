@@ -28,8 +28,7 @@ already carries, and the reader routes to it:
   zstandard  -> multimodal/zstd.py     decompress()
 
 On the write side deflate/snappy/zstandard use the engine's own
-encoders; bzip2/xz use stdlib ``bz2``/``lzma`` (the bzip2 side is a
-FOREIGN encoder for the from-spec decoder). Spark's own JVM Avro library
+encoders; bzip2/xz use stdlib ``bz2``/``lzma``. Spark's own JVM Avro library
 (avro-1.12.1.jar on this classpath) is the foreign pin for the
 CONTAINER itself: tests/test_avro_ocf.py writes with
 org.apache.avro.file.DataFileWriter under all six CodecFactory

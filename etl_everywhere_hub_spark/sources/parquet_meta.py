@@ -1,5 +1,4 @@
-"""Parquet footer reader — Thrift compact protocol from spec,
-dependency-free — round 12.
+"""Parquet footer statistics from a file TAIL, decoded by pyarrow.
 
 Why this belongs in the engine: at 100 TB the mechanism that makes
 queries cheap is not reading data — it's NOT reading data, and the
@@ -10,177 +9,49 @@ them internally, but an engine that plans its own file skipping
 files, a "which shards could hold key K" planner) needs to read
 footers WITHOUT launching a JVM scan per file — a footer is a ~KB
 range request at the file tail, the canonical object-store pattern.
-Reference analog: none (task.ts has no file formats) — north-star
-scale surface, same posture as sources/avro_ocf.py.
 
-Implemented from the public specs:
-- Thrift compact protocol (apache/thrift
-  doc/specs/thrift-compact-protocol.md): short-form field headers
-  (delta<<4 | type) with long-form zigzag field ids, bool-in-header,
-  zigzag varints for i16/i32/i64, fixed 8-byte little-endian
-  doubles, varint-length binary, list/set headers (size<<4 | elem
-  type, 15 -> varint size), map headers, nested structs with the
-  stop byte. The decoder is GENERIC (field-id -> value dicts), so
-  the parquet layer below it is a plain schema mapping, not a
-  hand-woven parser.
-- Parquet file format (apache/parquet-format
-  src/main/thrift/parquet.thrift): the PAR1 magic at both ends, the
-  4-byte little-endian footer length, FileMetaData / SchemaElement /
-  RowGroup / ColumnChunk / ColumnMetaData / Statistics field ids,
-  the physical-type / codec / encoding enums, and the plain-encoded
-  statistics values (INT32/INT64 little-endian, FLOAT/DOUBLE IEEE
-  LE, BYTE_ARRAY raw UTF-8 bytes, BOOLEAN single byte). Both the
-  modern min_value/max_value (field 5/6, order defined by the
-  column's logical type) and the legacy min/max (field 1/2) pairs
-  are surfaced; readers must prefer 5/6.
+- Framing, from the parquet format: the trailing PAR1 magic and the
+  4-byte little-endian footer length, so a tail too short for its
+  footer fails with a widen-the-range message.
+- The Thrift FileMetaData is decoded by pyarrow
+  (``pq.read_metadata`` over the tail buffer); ``footer_stats``
+  flattens it to one dict per column chunk with the statistics in
+  their plain physical values (min_value/max_value, falling back to
+  the legacy min/max as pyarrow does).
 
 Foreign pins (tests/test_parquet_meta.py): DuckDB's
 ``parquet_metadata()`` table function over the SAME files — every
 offset, size, count, codec, encoding list, and rendered stat value
-matches row for row — plus pyarrow's metadata API on multi-row-group
-files with nulls, and files written by Spark itself, DuckDB, and
-pyarrow (three independent writers; ours is read-only by design —
-the engine writes parquet through Spark).
+matches row for row — plus files written by Spark itself, DuckDB, and
+pyarrow (the engine writes parquet through Spark).
 
-Scale posture: ``footer_stats`` needs only the file TAIL (the
-``tail_bytes`` contract states how much: footer length + 8; a 1 MiB
-tail covers every real footer we've seen and the decoder tells you
-loudly when it doesn't). A catalog sweep is then: list files, range-
-read tails in parallel tasks, decode worker-side — bytes moved are
-O(files x footer), not O(data). The q372 query does exactly that
-shape over the testdata tables and proves the decoded stats against
-the data itself relationally.
+Scale posture: ``footer_stats`` needs only the file TAIL (footer
+length + 8 bytes; a 1 MiB tail covers every real footer we've seen
+and the reader tells you loudly when it doesn't). A catalog sweep is
+then: list files, range-read tails in parallel tasks, decode
+worker-side — bytes moved are O(files x footer), not O(data). The
+q372 query does exactly that shape over the testdata tables and
+proves the decoded stats against the data itself relationally.
 """
 from __future__ import annotations
 
+import json
 import struct
 
 _MAGIC = b"PAR1"
-
-# thrift compact wire types
-_STOP, _TRUE, _FALSE, _BYTE, _I16, _I32, _I64 = 0, 1, 2, 3, 4, 5, 6
-_DOUBLE, _BINARY, _LIST, _SET, _MAP, _STRUCT = 7, 8, 9, 10, 11, 12
-
-PHYSICAL_TYPES = {
-    0: "BOOLEAN", 1: "INT32", 2: "INT64", 3: "INT96", 4: "FLOAT",
-    5: "DOUBLE", 6: "BYTE_ARRAY", 7: "FIXED_LEN_BYTE_ARRAY",
-}
-CODECS = {
-    0: "UNCOMPRESSED", 1: "SNAPPY", 2: "GZIP", 3: "LZO", 4: "BROTLI",
-    5: "LZ4", 6: "ZSTD", 7: "LZ4_RAW",
-}
-ENCODINGS = {
-    0: "PLAIN", 2: "PLAIN_DICTIONARY", 3: "RLE", 4: "BIT_PACKED",
-    5: "DELTA_BINARY_PACKED", 6: "DELTA_LENGTH_BYTE_ARRAY",
-    7: "DELTA_BYTE_ARRAY", 8: "RLE_DICTIONARY", 9: "BYTE_STREAM_SPLIT",
-}
+_UNITS = {"milliseconds": "MILLIS", "microseconds": "MICROS",
+          "nanoseconds": "NANOS"}
+# pyarrow names codecs by its own enum: parquet's LZ4_RAW is its 'LZ4',
+# and parquet's Hadoop-framed LZ4 has no pyarrow name at all
+_CODECS = {"LZ4": "LZ4_RAW", "UNKNOWN": "LZ4"}
 
 
-class ThriftCompactReader:
-    """Generic thrift compact-protocol decoder. Structs decode to
-    {field_id: value}; lists/sets to python lists, maps to dicts,
-    binary to bytes. Unknown field TYPES raise (a skipped-but-
-    undecodable field would silently drop data)."""
+def _read_metadata(data: bytes):
+    """pyarrow FileMetaData of the footer at the end of ``data`` (the
+    whole file or a tail slice holding footer length + 8 bytes)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-
-    def _take(self, n: int) -> bytes:
-        if self.pos + n > len(self.data):
-            raise ValueError("thrift: truncated input")
-        b = self.data[self.pos:self.pos + n]
-        self.pos += n
-        return b
-
-    def _varint(self) -> int:
-        shift = acc = 0
-        while True:
-            if self.pos >= len(self.data):
-                raise ValueError("thrift: truncated varint")
-            b = self.data[self.pos]
-            self.pos += 1
-            acc |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return acc
-            shift += 7
-            if shift >= 70:
-                # 10 groups carry 70 bits > 64 — an 11th byte is
-                # malformed (round-12 review: the old `> 70` let an
-                # 11-byte varint through)
-                raise ValueError("thrift: varint too long")
-
-    def _zigzag(self) -> int:
-        z = self._varint()
-        return (z >> 1) ^ -(z & 1)
-
-    def _value(self, wt: int, in_field: bool = False):
-        if wt in (_TRUE, _FALSE):
-            # bools carry their value IN the field header only for
-            # struct fields; as list/set/map ELEMENTS each bool is
-            # one byte (round-12 review: the old code consumed zero
-            # bytes there and silently desynced)
-            if in_field:
-                return wt == _TRUE
-            b = self._take(1)[0]
-            if b == 1:
-                return True
-            if b in (0, 2):
-                return False
-            raise ValueError(f"thrift: invalid bool element {b}")
-        if wt == _BYTE:
-            return struct.unpack("b", self._take(1))[0]
-        if wt in (_I16, _I32, _I64):
-            return self._zigzag()
-        if wt == _DOUBLE:
-            return struct.unpack("<d", self._take(8))[0]
-        if wt == _BINARY:
-            return self._take(self._varint())
-        if wt in (_LIST, _SET):
-            hdr = self._take(1)[0]
-            size = hdr >> 4
-            et = hdr & 0x0F
-            if size == 15:
-                size = self._varint()
-            return [self._value(et) for _ in range(size)]
-        if wt == _MAP:
-            size = self._varint()
-            if size == 0:
-                return {}
-            hdr = self._take(1)[0]
-            kt, vt = hdr >> 4, hdr & 0x0F
-            return {self._value(kt): self._value(vt)
-                    for _ in range(size)}
-        if wt == _STRUCT:
-            return self.read_struct()
-        raise ValueError(f"thrift: unknown wire type {wt}")
-
-    def read_struct(self) -> dict:
-        out = {}
-        last_fid = 0
-        while True:
-            b = self._take(1)[0]
-            if b == _STOP:
-                return out
-            delta = b >> 4
-            wt = b & 0x0F
-            if delta == 0:
-                fid = self._zigzag()
-            else:
-                fid = last_fid + delta
-            out[fid] = self._value(wt, in_field=True)
-            last_fid = fid
-
-
-# ------------------------------------------------------------- parquet
-
-def parse_footer(data: bytes) -> dict:
-    """Parse a parquet footer from ``data``, which may be the whole
-    file or just a TAIL slice that still contains the full footer
-    (length + 8 trailing bytes). Returns the raw FileMetaData struct
-    plus convenience fields."""
     if len(data) < 12:
         raise ValueError("parquet: shorter than the minimal file")
     if data[-4:] != _MAGIC:
@@ -192,123 +63,77 @@ def parse_footer(data: bytes) -> dict:
             f"{len(data) - 8} tail bytes were provided — widen the "
             "tail range request"
         )
-    raw = data[len(data) - 8 - meta_len: len(data) - 8]
-    fmd = ThriftCompactReader(raw).read_struct()
-    if 3 not in fmd or 4 not in fmd:
-        raise ValueError("parquet: FileMetaData missing num_rows/row_groups")
-    return {
-        "version": fmd.get(1),
-        "num_rows": fmd[3],
-        "created_by": (fmd.get(6) or b"").decode("utf-8", "replace"),
-        "schema": fmd.get(2, []),
-        "row_groups": fmd[4],
-        "raw": fmd,
-    }
+    try:
+        return pq.read_metadata(pa.BufferReader(data))
+    except OSError as e:
+        raise ValueError(f"parquet: {str(e).strip()}") from None
 
 
-def _decode_stat(val: bytes | None, ptype: int):
-    """Plain-decode one statistics value per physical type. BYTE_ARRAY
-    renders as UTF-8 text (parquet string stats are raw bytes; all
-    engine uses are string columns). INT96 has no defined stats
-    order — refuse rather than guess."""
-    if val is None:
+def parse_footer(data: bytes) -> dict:
+    """num_rows and created_by of the footer at the end of ``data``
+    (the whole file or a tail slice)."""
+    md = _read_metadata(data)
+    return {"num_rows": md.num_rows, "created_by": md.created_by or ""}
+
+
+def _logical(lt) -> str | None:
+    """Label of a leaf's LogicalType (pyarrow folds legacy converted
+    types into it): STRING, DATE, DECIMAL, ..., TIMESTAMP(MICROS),
+    INTEGER(16,signed); None for an unannotated column."""
+    t = lt.type
+    if t == "NONE":
         return None
-    t = PHYSICAL_TYPES.get(ptype)
-    if t == "BOOLEAN":
-        return val != b"\x00"
-    if t == "INT32":
-        return struct.unpack("<i", val)[0]
-    if t == "INT64":
-        return struct.unpack("<q", val)[0]
-    if t == "FLOAT":
-        return struct.unpack("<f", val)[0]
-    if t == "DOUBLE":
-        return struct.unpack("<d", val)[0]
-    if t in ("BYTE_ARRAY", "FIXED_LEN_BYTE_ARRAY"):
-        return val.decode("utf-8", "replace")
-    raise ValueError(f"parquet: no stats decode for {t}")
+    if t in ("TIMESTAMP", "TIME", "INT"):
+        j = json.loads(lt.to_json())
+        if t == "INT":
+            return "INTEGER(%d,%s)" % (
+                j["bitWidth"], "signed" if j["isSigned"] else "unsigned")
+        return f"{t}({_UNITS.get(j['timeUnit'], '?')})"
+    return t
+
+
+def _plain(v, ptype: str):
+    """A raw statistics value as the engine reads it: BYTE_ARRAY and
+    FIXED_LEN_BYTE_ARRAY render as UTF-8 text (all engine uses are
+    string columns). INT96 has no defined stats order, so pyarrow
+    reports no statistics for it."""
+    if ptype in ("BYTE_ARRAY", "FIXED_LEN_BYTE_ARRAY"):
+        return v.decode("utf-8", "replace")
+    return v
 
 
 def footer_stats(data: bytes) -> list:
     """Flatten the footer into one dict per (row group, column chunk):
-    path, physical type, codec, encodings, num_values, sizes, page
-    offsets, and decoded statistics (min/max prefer the modern
-    min_value/max_value fields 5/6, falling back to legacy 1/2 —
-    identical for the integer columns the engine prunes on). This is
-    the file-skipping planner's input."""
-    f = parse_footer(data)
-    # flat-leaf logical annotation: SchemaElement field 10 is the
-    # LogicalType union per parquet.thrift — 1 STRING, 2 MAP, 3 LIST,
-    # 4 ENUM, 5 DECIMAL, 6 DATE, 7 TIME, 8 TIMESTAMP, 10 INTEGER
-    # (IntType{bitWidth=1, isSigned=2}), 11 UNKNOWN, 12 JSON,
-    # 13 BSON, 14 UUID, 15 FLOAT16 (round-12 review: 10/11 were
-    # previously mislabeled UUID/FLOAT16, which defeated the
-    # catalog-sweep prune gate for sized-int columns); field 6 is
-    # the legacy ConvertedType enum
-    _LOGICAL = {1: "STRING", 2: "MAP", 3: "LIST", 4: "ENUM",
-                5: "DECIMAL", 6: "DATE", 7: "TIME", 8: "TIMESTAMP",
-                10: "INTEGER", 11: "UNKNOWN", 12: "JSON", 13: "BSON",
-                14: "UUID", 15: "FLOAT16"}
-    _UNIT = {1: "MILLIS", 2: "MICROS", 3: "NANOS"}
-    logical = {}
-    for el in f["schema"][1:]:
-        name = el.get(4, b"").decode("utf-8")
-        lt = el.get(10)
-        if isinstance(lt, dict) and lt:
-            fid = next(iter(lt))
-            tag = _LOGICAL.get(fid, f"?{fid}")
-            if tag in ("TIMESTAMP", "TIME"):
-                unit = lt[fid].get(2, {})
-                u = next(iter(unit)) if isinstance(unit, dict) and unit \
-                    else None
-                tag = f"{tag}({_UNIT.get(u, '?')})"
-            elif tag == "INTEGER":
-                it = lt[fid]
-                tag = "INTEGER(%s,%s)" % (
-                    it.get(1, "?"),
-                    "signed" if it.get(2, True) else "unsigned")
-            logical[name] = tag
-        elif 6 in el:
-            logical[name] = f"CONVERTED:{el[6]}"
+    path, physical type, logical annotation, codec, encodings,
+    num_values, sizes, page offsets, and statistics (null/distinct
+    counts, min/max). This is the file-skipping planner's input."""
+    md = _read_metadata(data)
+    logical = [_logical(md.schema.column(i).logical_type)
+               for i in range(md.num_columns)]
     out = []
-    for rg_ix, rg in enumerate(f["row_groups"]):
-        rg_rows = rg.get(3)
-        for cc in rg.get(1, []):
-            md = cc.get(3)
-            if md is None:
-                raise ValueError(
-                    "parquet: ColumnChunk without inline metadata "
-                    "(external column metadata unsupported)"
-                )
-            ptype = md[1]
-            stats = md.get(12, {})
+    for rg_ix in range(md.num_row_groups):
+        rg = md.row_group(rg_ix)
+        for ci in range(rg.num_columns):
+            cc = rg.column(ci)
+            st = cc.statistics
+            mm = st is not None and st.has_min_max
             out.append({
                 "row_group": rg_ix,
-                "rg_num_rows": rg_rows,
-                "path": ".".join(
-                    p.decode("utf-8") for p in md.get(3, [])),
-                "type": PHYSICAL_TYPES.get(ptype, f"?{ptype}"),
-                # annotations are declared on schema ELEMENTS; for
-                # nested paths (list/map wrappers) the leaf element
-                # name carries the leaf's annotation
-                "logical": logical.get(
-                    ".".join(p.decode("utf-8") for p in md.get(3, [])))
-                or logical.get(
-                    md[3][-1].decode("utf-8") if md.get(3) else ""),
-                "codec": CODECS.get(md[4], f"?{md[4]}"),
-                "encodings": sorted(
-                    ENCODINGS.get(e, f"?{e}") for e in md.get(2, [])),
-                "num_values": md[5],
-                "total_uncompressed_size": md.get(6),
-                "total_compressed_size": md.get(7),
-                "data_page_offset": md.get(9),
-                "dictionary_page_offset": md.get(11),
-                "null_count": stats.get(3),
-                "distinct_count": stats.get(4),
-                "min": _decode_stat(
-                    stats.get(6, stats.get(2)), ptype),
-                "max": _decode_stat(
-                    stats.get(5, stats.get(1)), ptype),
+                "rg_num_rows": rg.num_rows,
+                "path": cc.path_in_schema,
+                "type": cc.physical_type,
+                "logical": logical[ci],
+                "codec": _CODECS.get(cc.compression, cc.compression),
+                "encodings": sorted(cc.encodings),
+                "num_values": cc.num_values,
+                "total_uncompressed_size": cc.total_uncompressed_size,
+                "total_compressed_size": cc.total_compressed_size,
+                "data_page_offset": cc.data_page_offset,
+                "dictionary_page_offset": cc.dictionary_page_offset,
+                "null_count": st.null_count if st is not None else None,
+                "distinct_count": st.distinct_count if st is not None else None,
+                "min": _plain(st.min_raw, cc.physical_type) if mm else None,
+                "max": _plain(st.max_raw, cc.physical_type) if mm else None,
             })
     return out
 

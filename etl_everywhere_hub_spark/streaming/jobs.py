@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import weakref
 from typing import Iterable
 
 import pandas as pd
@@ -36,6 +37,13 @@ from pyspark.sql.types import (
 from etl_everywhere_hub_spark.session import configure_session
 
 _sink_counter = 0
+
+# events.parquet's schema per session and path: reading it is a one-task
+# Spark job that every stream_events call would otherwise repeat. Keyed
+# weakly by the session object, like catalog._TABLE_MEMO.
+_SCHEMA_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, StructType]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,10 +66,13 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = os.path.join(tempfile.gettempdir(), f"ee_stream_src_{key}")
     os.makedirs(d, exist_ok=True)
     link = f"{d}/events.parquet"
+    path = f"{sf_dir}/events.parquet"
     if not os.path.exists(link):
-        os.symlink(f"{sf_dir}/events.parquet", link)
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    s = spark.readStream.schema(batch_schema).parquet(d)
+        os.symlink(path, link)
+    memo = _SCHEMA_MEMO.setdefault(spark, {})
+    if path not in memo:
+        memo[path] = spark.read.parquet(path).schema
+    s = spark.readStream.schema(memo[path]).parquet(d)
     if dict(s.dtypes).get("ts") == "bigint":
         s = s.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     else:

@@ -1,7 +1,8 @@
-"""bzip2 decoder tests (multimodal/bzip2.py): stdlib ``bz2``
-(libbzip2) as a FOREIGN encoder across all 9 levels, multi-block and
-multistream walks with offset contracts, the bzip2 CRC32 against its
-published check value, RLE1 corners, tampered-bitstream error paths,
+"""bzip2 tests (multimodal/bzip2.py): stdlib ``bz2`` (libbzip2) as a
+FOREIGN encoder across all 9 levels, multi-block and multistream
+walks with offset contracts and block counts, the bzip2 CRC32 against
+its published check value, RLE1 corners, tampered-bitstream error
+paths (every truncation and a flipped payload byte name bzip2),
 and the Wikipedia-dump fixture layer (functions/wikitext.py): page
 XML, entity escaping, and the Python/Column wikitext-strip twins."""
 
@@ -106,13 +107,25 @@ def test_trailing_garbage_raises():
 
 
 # ------------------------------------------------------ error paths
+def _two_stream_blob() -> bytes:
+    return bz2.compress(_pseudo(250000), 1) + bz2.compress(b"word " * 300, 9)
+
+
 def test_tampered_block_crc():
     blob = bytearray(bz2.compress(b"tamper me " * 40, 1))
     # block CRC field starts at bit 80 (header 32 + magic 48) —
-    # flipping a bit there leaves the body decodable but fails CRC
+    # flipping a bit there leaves the body decodable but fails CRC,
+    # which libbzip2 reports as an invalid stream
     blob[10] ^= 0x01
-    with pytest.raises(ValueError, match="CRC"):
+    with pytest.raises(ValueError, match="bzip2: Invalid data stream"):
         decode_stream(bytes(blob))
+    # one flipped payload byte in either stream of a two-stream blob
+    blob = _two_stream_blob()
+    for at in (len(blob) // 3, len(blob) - 100):
+        bad = bytearray(blob)
+        bad[at] ^= 0x01
+        with pytest.raises(ValueError, match="^bzip2: "):
+            bzip2_streams(bytes(bad))
 
 
 def test_randomized_bit_rejected():
@@ -135,6 +148,30 @@ def test_bad_magics_and_truncation():
     blob[4] ^= 0xFF  # corrupt the block magic
     with pytest.raises(ValueError, match="magic"):
         decode_stream(bytes(blob))
+    # every cut in the headers, footers and stream boundaries of a
+    # two-stream blob, and a stride through the block bodies
+    blob = _two_stream_blob()
+    sts = bzip2_streams(blob)
+    assert [st["n_blocks"] for st in sts] == [3, 1]
+    ends = {st["end"] for st in sts}
+    cuts = set(range(1, 40)) | set(range(1, len(blob), 997))
+    for st in sts:
+        cuts |= set(range(st["end"] - 20, st["end"] + 20))
+    for cut in sorted(c for c in cuts if 0 < c < len(blob) and c not in ends):
+        with pytest.raises(ValueError, match="^bzip2: "):
+            bzip2_streams(blob[:cut])
+
+
+def test_block_magic_found_at_every_bit_shift():
+    # blocks start at arbitrary bit offsets inside a stream's one
+    # bitstream; the finder must see the 48-bit magic at all 8 shifts
+    from etl_everywhere_hub_spark.multimodal.bzip2 import _block_bits
+
+    for shift in range(8):
+        blob = b"\x00" * 5 + (0x314159265359 << (8 - shift)).to_bytes(7, "big")
+        blob += b"\x00" * 8
+        assert _block_bits(blob, 0, len(blob) * 8) == [40 + shift]
+        assert _block_bits(blob, 41 + shift, len(blob) * 8) == []
 
 
 # --------------------------------------------- wiki fixture layer

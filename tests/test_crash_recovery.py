@@ -10,9 +10,10 @@ sink's documented delivery semantics:
 
 - file (parquet) sink: exactly-once per micro-batch via the
   checkpointed _spark_metadata log → set equality.
-- update-mode stateful output (applyInPandasWithState device cache):
-  at-least-once update emissions; downstream consumes last-write-wins
-  → LWW-collapsed equality (the upsert_snapshot_sink semantic).
+- update-mode stateful output (the device cache, Spark's native
+  streaming max_by aggregate): at-least-once update emissions;
+  downstream consumes last-write-wins → LWW-collapsed equality (the
+  upsert_snapshot_sink semantic).
 - memory sink in complete mode: the restart's first batch must
   rebuild the FULL snapshot from checkpointed state, including
   pre-kill groups the restarted run never saw as input.

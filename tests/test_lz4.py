@@ -3,7 +3,8 @@ CLI as FOREIGN encoder (all levels) and FOREIGN decoder (our frames
 must be accepted), the frame-feature matrix (store / block checksums
 / content size / linked blocks), hand-built blocks pinning overlap
 and extension-byte layouts, multi-frame walks with skippable frames,
-the .jsonl.lz4 record walk, and error paths."""
+the .jsonl.lz4 record walk, and error paths: every truncation and a
+flipped payload byte raise a ValueError naming lz4."""
 
 from __future__ import annotations
 
@@ -158,7 +159,7 @@ def test_frame_errors():
         decode_frame(b"\x00\x00\x00\x00rest")
     bad = bytearray(good)
     bad[-1] ^= 0xFF  # content checksum field
-    with pytest.raises(ValueError, match="content checksum"):
+    with pytest.raises(ValueError, match="contentChecksum_invalid"):
         decode_frame(bytes(bad))
     bad = bytearray(good)
     bad[-5] ^= 0x01  # EndMark corrupted into a giant block size
@@ -177,6 +178,31 @@ def test_frame_errors():
     blob[6] ^= 0x01  # low byte of the 8-byte content size
     with pytest.raises(ValueError, match="header checksum"):
         decode_frame(bytes(blob))
+    # one flipped payload byte: stored blocks decode anything, so only
+    # the checksum catches it; liblz4 may fail on compressed bytes first
+    plain = b"payload under checksum " * 400
+    for block_cksum, what in ((True, "blockChecksum_invalid"),
+                              (False, "contentChecksum_invalid")):
+        for store, match in ((True, f"lz4: .*{what}"), (False, "^lz4: ")):
+            bad = bytearray(lz4_compress(plain, block_checksum=block_cksum,
+                                         store=store))
+            bad[len(bad) // 2] ^= 0x01
+            with pytest.raises(ValueError, match=match):
+                decode_frame(bytes(bad))
+    # every truncation of a linked-block frame with block AND content
+    # checksums, a skippable frame, then a plain frame
+    plain = (b"linked window " * 6000) + _pseudo(5000)
+    blob = lz4_compress(plain, block_indep=False, block_checksum=True,
+                        content_size=True)
+    blob += skippable_frame(b"meta", 2) + lz4_compress(b"tail " * 50)
+    frs = lz4_frames(blob)
+    assert frs[0]["n_blocks"] == 2 and not frs[0]["block_indep"]
+    ends = [f["end"] for f in frs]
+    for cut in range(1, len(blob)):
+        if cut in ends:
+            continue  # a frame boundary: a shorter but valid stream
+        with pytest.raises(ValueError, match="^lz4: "):
+            lz4_frames(blob[:cut])
 
 
 def test_multiframe_walk_and_skippable():

@@ -1,6 +1,6 @@
-"""Parquet footer reader (sources/parquet_meta.py): generic thrift
-compact-protocol decoder pinned on hand-built byte vectors, then the
-footer layer pinned against THREE foreign writers/readers — DuckDB's
+"""Parquet footer reader (sources/parquet_meta.py): PAR1 framing and
+loud failure on truncated or corrupt Thrift footers, then the footer
+layer pinned against THREE foreign writers/readers — DuckDB's
 parquet_metadata() over every testdata table (field-for-field),
 pyarrow's metadata API on multi-row-group files with nulls, and
 Spark's own parquet writer under gzip/zstd."""
@@ -14,7 +14,6 @@ import numpy as np
 import pytest
 
 from etl_everywhere_hub_spark.sources.parquet_meta import (
-    ThriftCompactReader,
     footer_stats,
     parse_footer,
     read_footer_tail,
@@ -26,51 +25,35 @@ TABLES = [
 ]
 
 
-# ------------------------------------------------------ thrift compact
+# ------------------------------------------------------------ framing
 
-def test_thrift_hand_built_vectors():
-    """One struct exercising every header form: short-delta fields,
-    a long-form zigzag field id, bool-in-header true/false, zigzag
-    i32/i64, double, binary, a long-form list (>14 elements), a map,
-    and a nested struct."""
-    b = bytearray()
-    b += bytes([0x15, 0x54])                # fid 1, i32, zigzag(42)=84
-    b += bytes([0x11])                      # fid 2, bool true
-    b += bytes([0x12])                      # fid 3, bool false
-    b += bytes([0x18, 0x02]) + b"hi"        # fid 4, binary len 2
-    b += bytes([0x17]) + struct.pack("<d", -2.5)   # fid 5, double
-    # LONG-form field id: delta nibble 0, type i64; fid as zigzag
-    # varint (zigzag(100)=200 -> C8 01); value zigzag(-2)=3
-    b += bytes([0x06, 0xC8, 0x01, 0x03])
-    # fid 101 (delta 1): LIST in long form — 16 BYTE elements, so the
-    # size nibble saturates at 15 and a varint size follows
-    b += bytes([0x19, 0xF3, 0x10])
-    for v in range(16):
-        b += struct.pack("b", v - 8)
-    # fid 102 (delta 1): MAP, 1 entry, key binary / value i32,
-    # key "k", value zigzag(3)=6
-    b += bytes([0x1B, 0x01, 0x85, 0x01]) + b"k" + bytes([0x06])
-    # fid 103 (delta 1): nested STRUCT holding one true bool (fid 1)
-    b += bytes([0x1C, 0x11, 0x00])
-    b += bytes([0x00])                      # outer stop
-    r = ThriftCompactReader(bytes(b))
-    s = r.read_struct()
-    assert s[1] == 42 and s[2] is True and s[3] is False
-    assert s[4] == b"hi" and s[5] == -2.5
-    assert s[100] == -2
-    assert s[101] == [v - 8 for v in range(16)]
-    assert s[102] == {b"k": 3}
-    assert s[103] == {1: True}
-    assert r.pos == len(b)
+def _cut_footer_blobs():
+    """pyarrow-written footers with valid PAR1 framing around Thrift
+    bytes cut short at every length, plus one with a wire type that
+    does not exist (0xD)."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = io.BytesIO()
+    pq.write_table(pa.table({"k": [1, 2, 3], "s": ["a", "b", None]}), buf)
+    data = buf.getvalue()
+    n = struct.unpack("<I", data[-8:-4])[0]
+    footer = data[-8 - n:-8]
+    for keep in range(n):
+        yield b"PAR1" + footer[:keep] + struct.pack("<I", keep) + b"PAR1"
+    yield b"PAR1" + b"\x1D" + footer[1:] + struct.pack("<I", n) + b"PAR1"
 
 
 def test_thrift_truncation_is_loud():
-    with pytest.raises(ValueError, match="truncated"):
-        ThriftCompactReader(bytes([0x15])).read_struct()
-    with pytest.raises(ValueError, match="truncated varint"):
-        ThriftCompactReader(bytes([0x15, 0x80])).read_struct()
-    with pytest.raises(ValueError, match="unknown wire type"):
-        ThriftCompactReader(bytes([0x1D, 0x00])).read_struct()
+    """A footer whose Thrift FileMetaData is truncated or carries an
+    unknown wire type raises a ValueError naming parquet — from
+    parse_footer and footer_stats alike, never a partial answer."""
+    for blob in _cut_footer_blobs():
+        for read in (parse_footer, footer_stats):
+            with pytest.raises(ValueError, match="^parquet: "):
+                read(blob)
 
 
 def test_footer_frame_errors():
@@ -220,10 +203,9 @@ def test_tail_range_request_shape(sf_dir):
 def test_deltalite_logged_stats_match_our_footer_decode(spark, tmp_path):
     """Three layers meet: deltalite harvests per-file stats through
     pyarrow at commit time (sources/deltalite.py:_harvest_stats);
-    this reader decodes the SAME files from the raw footer bytes.
-    They must agree on every file — pyarrow acting as one more
-    foreign reader, and the engine's pruning metadata being provably
-    what the files actually say."""
+    this reader decodes the SAME files from their footer tails alone.
+    They must agree on every file — the engine's pruning metadata
+    being provably what the files actually say."""
     import glob
     import json as _json
 
@@ -262,23 +244,6 @@ def test_deltalite_logged_stats_match_our_footer_decode(spark, tmp_path):
             assert logged["nullCount"][col] == by_col[col]["nulls"], col
         checked += 1
     assert checked == 4
-
-
-def test_thrift_bool_list_elements():
-    """Round-12 review regression: bools as list ELEMENTS are one
-    byte each (the in-header trick is struct-field-only); the old
-    decode consumed zero bytes and silently desynced."""
-    # fid 1: list of 3 bools [true, false, true], then fid 2 i32 7
-    blob = bytes([0x19, 0x31, 0x01, 0x02, 0x01, 0x15, 0x0E, 0x00])
-    s = ThriftCompactReader(blob).read_struct()
-    assert s[1] == [True, False, True]
-    assert s[2] == 7
-    with pytest.raises(ValueError, match="invalid bool element"):
-        ThriftCompactReader(
-            bytes([0x19, 0x11, 0x07, 0x00])).read_struct()
-    with pytest.raises(ValueError, match="varint too long"):
-        ThriftCompactReader(bytes([0x15]) + b"\x80" * 10 + b"\x01"
-                            + b"\x00").read_struct()
 
 
 def test_sized_int_logical_annotation(tmp_path):

@@ -310,6 +310,21 @@ def test_upsert_sink_checkpoint_restart(spark, tmp_path):
     assert snap2 == {"inreach-1": 3, "inreach-2": 2, "inreach-3": 5}
 
 
+def test_stream_events_reads_the_schema_once_per_session(spark, sf_dir):
+    """The events schema comes from a per-session memo: a repeat
+    stream_events call starts no Spark job (reading the parquet schema
+    is one)."""
+    first = jobs.stream_events(spark, sf_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("stream-events-again", "second stream_events call")
+    try:
+        again = jobs.stream_events(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("stream-events-again") == []
+    assert again.schema == first.schema
+
+
 def test_stream_stream_join_equals_batch(spark, sf_dir):
     """Stream-stream interval join (purchase ⋈ preceding-hour clicks)
     must produce exactly the batch join's pairs on the same events."""

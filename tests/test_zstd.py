@@ -1,9 +1,11 @@
 """Zstandard (RFC 8878) codec tests (multimodal/zstd.py): xxh64
 vectors, encoder/decoder roundtrip matrix, the zstd CLI as a FOREIGN
 encoder (FSE + Huffman + sequences + repeat modes) and FOREIGN
-decoder (our frames must be accepted), hand-built compressed blocks
-pinning specific section layouts, multi-frame walks with skippable
-frames, the .jsonl.zst record walk, and error paths."""
+decoder (our frames must be accepted), hand-built frames pinning
+specific header and block layouts, the encoder's bitstream and
+Huffman-code invariants, multi-frame walks with skippable frames,
+the .jsonl.zst record walk, and error paths: every truncation and a
+flipped payload byte raise a ValueError naming zstd."""
 
 from __future__ import annotations
 
@@ -15,13 +17,11 @@ import subprocess
 import pytest
 
 from etl_everywhere_hub_spark.multimodal.zstd import (
-    _BackBits,
+    _BackBitWriter,
+    _huf_codes,
+    _huf_weights,
     decode_frame,
-    parse_dictionary,
     decompress,
-    fse_build_dtable,
-    fse_read_ncount,
-    huf_build_dtable,
     jsonl_zst_records,
     skippable_frame,
     xxh64,
@@ -174,48 +174,41 @@ def test_hand_built_compressed_block_rle_literals():
 
 
 def test_backward_bitstream_marker():
-    br = _BackBits(bytes([0b10110001, 0b00000101]))  # marker = bit 2 of byte 1
-    assert br.read(2) == 0b01  # bits 9,8
-    assert br.read(4) == 0b1011  # bits 7..4
-    with pytest.raises(ValueError, match="1-marker"):
-        _BackBits(b"\xff\x00")
-
-
-def test_fse_ncount_roundtrip_predefined_shape():
-    # encode-by-hand is overkill; instead pin table-build invariants
-    from etl_everywhere_hub_spark.multimodal.zstd import (
-        _LL_DEFAULT,
-        _ML_DEFAULT,
-        _OF_DEFAULT,
-    )
-
-    for counts, al in (_LL_DEFAULT, _ML_DEFAULT, _OF_DEFAULT):
-        t = fse_build_dtable(counts, al)
-        assert len(t) == 1 << al
-        # every positive-probability symbol appears exactly count times
-        from collections import Counter
-
-        seen = Counter(sym for sym, _nb, _bl in t)
-        for s, c in enumerate(counts):
-            assert seen[s] == (1 if c == -1 else c), s
-        # transitions stay in-table
-        for _sym, nb, base in t:
-            assert 0 <= base and base + (1 << nb) <= len(t)
+    # groups added last sit highest, under a 1-marker a decoder finds
+    # as the top set bit of the last byte (§3.1.1.3.2.1.1)
+    w = _BackBitWriter()
+    w.add(0b1011, 4)
+    w.add(0b01, 2)
+    assert w.close() == bytes([0b1011011])
+    w = _BackBitWriter()
+    w.add(0xFF, 8)
+    assert w.close() == b"\xff\x01"  # marker alone in a new byte
 
 
 def test_huffman_table_kraft():
-    # weights 2,2,1,1 + implied -> kraft-exact table
-    table, max_bits = huf_build_dtable([2, 2, 1, 1, 2])
-    assert len(table) == 1 << max_bits
-    with pytest.raises(ValueError, match="power of 2"):
-        # weights that cannot complete: explicit sum 3 -> left 1 ok;
-        # use sum that leaves a non-power gap: 2^1+2^1+2^0 = 5 -> 8-5=3
-        from etl_everywhere_hub_spark.multimodal.zstd import _huf_read_weights
-
-        _huf_read_weights(bytes([127 + 3, 0x22, 0x10]), 0)
+    # the encoder's code lengths fill the code space exactly (Σ2^-len
+    # == 1) and respect the 11-bit cap even for skewed frequencies
+    skewed = {s: 1 << min(s, 30) for s in range(40)}
+    for freq in ({97: 5, 98: 2, 99: 1, 100: 1}, skewed):
+        lengths = _huf_weights(freq)
+        assert sum(2.0 ** -n for n in lengths if n) == 1.0
+        assert max(lengths) <= 11
+        codes, max_bits = _huf_codes(lengths)
+        assert sorted(codes) == sorted(freq) and max_bits == max(lengths)
+    with pytest.raises(ValueError, match="Kraft"):
+        _huf_codes([1, 2, 2, 2])  # 1/2 + 3/4 overfills the code space
 
 
 # --------------------------------------------------- error paths
+def _multi_frame_blob() -> tuple:
+    """Two zstd frames around a skippable one: (blob, frame ends)."""
+    blob = zstd_compress(b"first frame " * 40, checksum=True)
+    blob += skippable_frame(b"shard-meta", nibble=3)
+    blob += zstd_compress(bytes(range(256)) * 12, mode="auto",
+                          block_size=1000, single_segment=False)
+    return blob, [f["frame_end"] for f in zstd_frames(blob)]
+
+
 def test_error_paths():
     with pytest.raises(ValueError, match="bad magic"):
         decode_frame(b"\x00\x00\x00\x00")
@@ -232,100 +225,35 @@ def test_error_paths():
     bad = good[:-1] + bytes([good[-1] ^ 0xFF])
     with pytest.raises(ValueError, match="checksum"):
         decode_frame(bad)
-    # declared FCS vs decoded length
+    # declared FCS vs decoded length (libzstd reports it as corruption)
     f = bytearray(zstd_compress(b"abcdef", mode="store", checksum=False))
     f[5] = 99  # corrupt the 1-byte FCS
-    with pytest.raises(ValueError, match="content size"):
+    with pytest.raises(ValueError, match="zstd: .*corruption"):
         decode_frame(bytes(f))
+    # one flipped payload byte under a content checksum
+    payload = b"the quick brown fox jumps over the lazy dog " * 50
+    for mode in ("auto", "store"):
+        bad = bytearray(zstd_compress(payload, mode=mode, checksum=True))
+        bad[len(bad) // 2] ^= 0x01
+        with pytest.raises(ValueError, match="zstd: .*checksum"):
+            decompress(bytes(bad))
+    # every truncation of a multi-frame blob with a skippable frame
+    blob, ends = _multi_frame_blob()
+    assert len(ends) == 3
+    for cut in range(1, len(blob)):
+        if cut in ends:
+            continue  # a frame boundary: a shorter but valid stream
+        with pytest.raises(ValueError, match="^zstd: "):
+            zstd_frames(blob[:cut])
 
 
 def test_dictionary_frames_require_the_dictionary():
     # frame header declaring dictionary id 7 (1-byte did flag):
-    # decoding WITHOUT the dictionary must refuse (round 12 — the
-    # round-11 NotImplementedError boundary became real support)
+    # dictionary frames are refused, never decoded as garbage
     frame = bytes.fromhex("28b52ffd") + bytes([0x01, 0x00, 0x07])
     frame += (1 | (0 << 1) | (0 << 3)).to_bytes(3, "little")
     with pytest.raises(ValueError, match="requires dictionary 7"):
         decode_frame(frame)
-
-
-def _train_dictionary(tmp_path):
-    import os
-
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta",
-             "theta", "lambda"]
-    samples = []
-    for i in range(80):
-        h = hashlib_sha(str(i))
-        s = " ".join(words[(i + j) % 8] for j in range(60)) + " t" + h[:8]
-        p = str(tmp_path / f"s{i}.txt")
-        with open(p, "w") as fh:
-            fh.write(s)
-        samples.append(p)
-    dict_path = str(tmp_path / "dict")
-    r = subprocess.run(
-        ["zstd", "--train", *samples, "-o", dict_path, "--maxdict=4096"],
-        capture_output=True,
-    )
-    assert r.returncode == 0, r.stderr.decode()
-    payload = (" ".join(words * 30) + " uniquetail").encode()
-    return dict_path, payload
-
-
-def hashlib_sha(s: str) -> str:
-    import hashlib
-
-    return hashlib.sha256(s.encode()).hexdigest()
-
-
-@needs_cli
-def test_structured_dictionary_decode(tmp_path):
-    dict_path, payload = _train_dictionary(tmp_path)
-    dict_bytes = open(dict_path, "rb").read()
-    pd = parse_dictionary(dict_bytes)
-    assert pd["dict_id"] != 0 and len(pd["content"]) > 0
-    assert all(r > 0 for r in pd["reps"])
-    comp = subprocess.run(
-        ["zstd", "-q", "-c", "-D", dict_path], input=payload,
-        capture_output=True,
-    ).stdout
-    # without the dict: loud refusal, never garbage
-    with pytest.raises(ValueError, match="requires dictionary"):
-        decompress(comp)
-    # with it: exact recovery (the tiny frame proves treeless/repeat
-    # table reuse and prefix matches were genuinely exercised)
-    assert decompress(comp, dictionary=dict_bytes) == payload
-    assert len(comp) < len(payload) // 8
-    # wrong-ID dictionary refuses
-    wrong = dict(pd)
-    wrong["dict_id"] = pd["dict_id"] ^ 1
-    with pytest.raises(ValueError, match="requires dictionary"):
-        decompress(comp, dictionary=wrong)
-
-
-@needs_cli
-def test_raw_content_dictionary_decode(tmp_path):
-    payload = (b"raw dictionary window test " * 64) + b"tail"
-    raw = payload[:500]
-    rawp = tmp_path / "raw.bin"
-    rawp.write_bytes(raw)
-    comp = subprocess.run(
-        ["zstd", "-q", "-c", "-D", str(rawp)], input=payload,
-        capture_output=True,
-    ).stdout
-    assert decompress(comp, dictionary=raw) == payload
-    pd = parse_dictionary(raw)
-    assert pd["dict_id"] == 0 and pd["content"] == raw
-
-
-@needs_cli
-def test_dictionary_does_not_disturb_plain_frames(tmp_path):
-    dict_path, payload = _train_dictionary(tmp_path)
-    plain = b"no dict frame " * 100
-    nd = subprocess.run(["zstd", "-q", "-c"], input=plain,
-                        capture_output=True).stdout
-    assert decompress(nd, dictionary=open(dict_path, "rb").read()) == plain
-    assert decompress(nd) == plain
 
 
 # ------------------------------------------------- multi-frame walk

@@ -5,11 +5,15 @@ the same parquet fixtures, canonicalizes both results, and reports
 match/mismatch. Usage:
 
     python tools/check.py [--sf /root/testdata/sf0.001] [name-substring ...]
+
+It runs from any directory, with or without PYTHONPATH: the checkout
+root goes on the import path of the driver and the Python workers.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import re
 import sys
 import time
@@ -72,6 +76,11 @@ def _take_flag(argv: list[str], flag: str) -> tuple[list[str], str | None]:
 
 
 def main() -> int:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    # Python workers inherit the JVM's environment, which is ours
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p)
     argv = sys.argv[1:]
     argv, json_out = _take_flag(argv, "--json")
     argv, sf_arg = _take_flag(argv, "--sf")

@@ -758,71 +758,75 @@ def smoke_codec_interop() -> list[str]:
     else:
         out.append("SKIP(env) codec-interop/tiff: Pillow absent")
 
-    # --- zstd: the reference CLI as foreign encoder AND decoder
-    #     (round 12; the deep matrix lives in tests/test_zstd.py —
-    #     this is the cluster-environment spot check) ---
+    # --- zstd: the reference CLI as foreign encoder AND decoder of
+    #     the frame walk + libzstd decode (the deep matrix lives in
+    #     tests/test_zstd.py — this is the cluster-environment spot
+    #     check) ---
     zstd_cli = shutil.which("zstd")
     if zstd_cli:
         try:
             import subprocess
 
             from etl_everywhere_hub_spark.multimodal.zstd import (
-                decompress,
                 zstd_compress,
+                zstd_frames,
             )
 
             payload = (b"cluster smoke zstd payload " * 512) + bytes(
                 range(256)
             )
-            for lvl in ("-1", "-19"):
-                comp = subprocess.run(
+            blob = b"".join(
+                subprocess.run(
                     ["zstd", "-q", lvl, "-c"], input=payload,
                     capture_output=True,
                 ).stdout
-                assert decompress(comp) == payload, f"decode at {lvl}"
+                for lvl in ("-1", "-19")
+            )
+            frames = zstd_frames(blob)
+            assert [f["payload"] for f in frames] == [payload] * 2, "decode"
+            assert frames[1]["frame_start"] == frames[0]["frame_end"]
+            assert frames[1]["frame_end"] == len(blob), "frame walk"
             ours = zstd_compress(payload, mode="auto")
             r = subprocess.run(
                 ["zstd", "-d", "-q", "-c"], input=ours, capture_output=True
             )
             assert r.returncode == 0 and r.stdout == payload, "CLI readback"
             out.append(
-                "PASS codec-interop/zstd (CLI levels 1/19 decoded; our "
-                "frames accepted by the CLI)"
+                "PASS codec-interop/zstd (CLI levels 1/19 walked and "
+                "decoded; our frames accepted by the CLI)"
             )
         except Exception as e:  # noqa: BLE001
             out.append(f"FAIL codec-interop/zstd: {type(e).__name__}: {e}")
     else:
         out.append("SKIP(env) codec-interop/zstd: zstd CLI absent")
 
-    # --- bzip2: the bzip2 CLI as foreign encoder, plus our decoder
-    #     against whatever libbzip2 the cluster's Python links (round
-    #     12; the deep matrix lives in tests/test_bzip2.py) ---
+    # --- bzip2: the bzip2 CLI and the cluster Python's libbzip2 as
+    #     foreign encoders of the stream/block walk (the deep matrix
+    #     lives in tests/test_bzip2.py) ---
     try:
         import bz2 as _bz2
         import subprocess
 
-        from etl_everywhere_hub_spark.multimodal.bzip2 import (
-            decompress as bz_decompress,
-        )
+        from etl_everywhere_hub_spark.multimodal.bzip2 import bzip2_streams
 
         payload = (b"cluster smoke bzip2 payload " * 512) + bytes(range(256))
-        assert bz_decompress(_bz2.compress(payload, 9)) == payload, (
-            "stdlib libbzip2 decode"
-        )
+        big = bytes(range(256)) * 1200  # > 100 kB: 4 blocks at level 1
+        blobs = [_bz2.compress(payload, 9), _bz2.compress(big, 1)]
         bzip2_cli = shutil.which("bzip2")
         if bzip2_cli:
-            comp = subprocess.run(
-                ["bzip2", "-1", "-c"], input=payload, capture_output=True
-            ).stdout
-            assert bz_decompress(comp) == payload, "CLI decode at -1"
-            out.append(
-                "PASS codec-interop/bzip2 (stdlib libbzip2 + CLI -1 decoded)"
-            )
-        else:
-            out.append(
-                "PASS codec-interop/bzip2 (stdlib libbzip2 decoded; "
-                "CLI absent)"
-            )
+            blobs.append(subprocess.run(
+                ["bzip2", "-1", "-c"], input=big, capture_output=True
+            ).stdout)
+        sts = bzip2_streams(b"".join(blobs))
+        assert [st["data"] for st in sts] == [payload, big, big][:len(blobs)]
+        assert [st["n_blocks"] for st in sts] == [1, 4, 4][:len(blobs)], (
+            "block walk"
+        )
+        out.append(
+            "PASS codec-interop/bzip2 (stdlib libbzip2"
+            + (" + CLI -1" if bzip2_cli else "; CLI absent")
+            + " streams walked and decoded)"
+        )
     except Exception as e:  # noqa: BLE001
         out.append(f"FAIL codec-interop/bzip2: {type(e).__name__}: {e}")
 

@@ -1,13 +1,17 @@
 """Regenerate API.md — one line per public callable (signature → first
 docstring sentence), grouped by module. Run from the repo root:
 
-    PYTHONPATH=. python tools/gen_api.py > API.md
+    python tools/gen_api.py > API.md
 """
 
 from __future__ import annotations
 
 import importlib
 import inspect
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SECTIONS = [
     ("Session factory", "etl_everywhere_hub_spark.session"),
@@ -60,7 +64,7 @@ SECTIONS = [
     ("WARC record codec", "etl_everywhere_hub_spark.multimodal.warc"),
     ("Zstandard codec (RFC 8878)", "etl_everywhere_hub_spark.multimodal.zstd"),
     ("PDF text extraction", "etl_everywhere_hub_spark.multimodal.pdf"),
-    ("bzip2 decoder", "etl_everywhere_hub_spark.multimodal.bzip2"),
+    ("bzip2 multistream walk", "etl_everywhere_hub_spark.multimodal.bzip2"),
     ("LZ4 codec", "etl_everywhere_hub_spark.multimodal.lz4"),
     ("XZ multistream walk (liblzma decode)", "etl_everywhere_hub_spark.multimodal.xz"),
     ("ustar member walk", "etl_everywhere_hub_spark.multimodal.tar"),
@@ -70,7 +74,7 @@ SECTIONS = [
      "etl_everywhere_hub_spark.functions.wikitext"),
     ("Avro Object Container Files",
      "etl_everywhere_hub_spark.sources.avro_ocf"),
-    ("Parquet footer reader (thrift compact)",
+    ("Parquet footer reader (pyarrow)",
      "etl_everywhere_hub_spark.sources.parquet_meta"),
     ("TFRecord + tf.Example",
      "etl_everywhere_hub_spark.multimodal.tfrecord"),
